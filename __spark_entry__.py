@@ -529,7 +529,7 @@ def _q_layout_append(spark, sf_dir):
         tempfile.gettempdir(),
         f"xss_scene_layout_append_{os.path.basename(os.path.normpath(sf_dir))}",
     )
-    # fresh dir per run: a session that ran a fused cube write has
+    # fresh dir per run: a session that ran a cube write has
     # partitionOverwriteMode=dynamic, under which the base overwrite would
     # leave stale partitions from a previous invocation
     shutil.rmtree(path, ignore_errors=True)

@@ -52,6 +52,9 @@ def test_build_cube_validates_at_entry(spark, sf0001_dir):
         cube_plan.build_cube(cat, grid, time_range=("2025-07-01", "2025-06-01"))
     with pytest.raises(ParamValidationError, match="bands"):
         cube_plan.build_cube(cat, grid, bands=[123])
+    # the partition keys share build_cube's validated metadata prelude
+    with pytest.raises(ParamValidationError, match="bbox"):
+        cube_plan.expected_partitions(cat, grid, bbox=(12.0, 49.0, 11.0, 50.0))
 
 
 def test_combine_pyramids_precedence(spark):

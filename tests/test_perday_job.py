@@ -40,6 +40,16 @@ def _cube_digest(spark, path):
     }
 
 
+def _write_reference(cat, grid, out):
+    """The single-call build of the whole time range, as one write."""
+    lineage.write_cube(
+        cube_plan.build_cube(cat, grid, time_range=TR, bands=BANDS), out,
+        expected_partitions=cube_plan.expected_partitions(
+            cat, grid, time_range=TR, bands=BANDS
+        ),
+    )
+
+
 def _grid_args(sf0001_dir, out):
     grid = synth.default_grid("sf0.001")
     x0, y1, x1, y0 = grid.x0, grid.y0, grid.x0 + grid.res * grid.width, grid.y0 - grid.res * grid.height
@@ -55,7 +65,7 @@ def test_per_day_equals_single_call(spark, sf0001_dir, tmp_path):
     grid = synth.default_grid("sf0.001")
     cat = SceneCatalog(spark, sf0001_dir)
     ref_out = str(tmp_path / "ref")
-    lineage.write_cube(cube_plan.build_cube(cat, grid, time_range=TR, bands=BANDS), ref_out)
+    _write_reference(cat, grid, ref_out)
 
     job = _load_job()
     day_out = str(tmp_path / "perday")
@@ -64,7 +74,7 @@ def test_per_day_equals_single_call(spark, sf0001_dir, tmp_path):
     assert job.main(_grid_args(sf0001_dir, day_out) + ["--per-day", "--resume"]) == 0
     assert _cube_digest(spark, day_out) == _cube_digest(spark, ref_out)
     # one commit per day in the log
-    commits, _ = lineage._commit_tables(day_out)
+    commits = lineage._commit_tables(day_out)
     days = spark.read.parquet(*commits).select("solar_day").distinct().count()
     assert len(commits) == days
 
@@ -77,7 +87,7 @@ def test_per_day_crash_resume_skips_committed_days(spark, sf0001_dir, tmp_path, 
     real_write = lineage.write_cube
     calls = {"n": 0}
 
-    def dying_write(cube, path, attrs=None, resume=True, expected_partitions=None):
+    def dying_write(cube, path, attrs=None, resume=True, *, expected_partitions):
         if calls["n"] >= 2:
             raise RuntimeError("injected crash after 2 committed days")
         calls["n"] += 1
@@ -105,5 +115,5 @@ def test_per_day_crash_resume_skips_committed_days(spark, sf0001_dir, tmp_path, 
     grid = synth.default_grid("sf0.001")
     cat = SceneCatalog(spark, sf0001_dir)
     ref_out = str(tmp_path / "ref2")
-    lineage.write_cube(cube_plan.build_cube(cat, grid, time_range=TR, bands=BANDS), ref_out)
+    _write_reference(cat, grid, ref_out)
     assert _cube_digest(spark, out) == _cube_digest(spark, ref_out)

@@ -183,6 +183,21 @@ def test_disk_tier_sweep_evicts_oldest(tmp_path, monkeypatch):
     assert tiles._plane_disk_load(("k2",)) is not None
 
 
+def test_disk_tier_ignores_planes_of_another_spec(tmp_path, monkeypatch):
+    """The disk tier outlives processes and checkouts: a pair stored under
+    another index-plane spec version is never served for the same key."""
+    monkeypatch.setenv("XSS_PLANE_CACHE_DIR", str(tmp_path))
+    pair = (
+        np.ones((1024, 1024), np.uint16), np.ones((1024, 1024), np.uint16),
+        0, 0, 10, 10,
+    )
+    with monkeypatch.context() as m:
+        m.setattr(tiles, "PLANE_SPEC", tiles.PLANE_SPEC + 1)
+        tiles._plane_disk_store(("k",), pair)
+        assert tiles._plane_disk_load(("k",)) is not None
+    assert tiles._plane_disk_load(("k",)) is None
+
+
 def test_disk_tier_disabled_by_empty_env(tmp_path, monkeypatch):
     monkeypatch.setenv("XSS_PLANE_CACHE_DIR", "")
     assert tiles._plane_disk_dir() is None

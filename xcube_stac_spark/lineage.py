@@ -3,17 +3,21 @@
 The reference has no resumability: one ``open_data`` call builds one in-memory
 dask graph, and a failure restarts everything. The north rule requires
 "resumable from per-partition checkpoints with lineage and metric emission",
-so this module adds the Iceberg-commit-log idea over plain parquet:
+so this module adds the Iceberg-commit-log idea over plain parquet, with ONE
+write path (``write_cube``):
 
-* the cube is written partitioned by ``(solar_day, tile_y, tile_x)``;
-* each successful write call publishes ONE parquet commit table under
+* the cube is written partitioned by ``(solar_day, tile_y, tile_x)``; every
+  data file carries a precomputed ``data_bytes`` column beside the planes;
+* the caller passes the partition keys the call must cover, derived from
+  metadata alone (``plans.cube.expected_partitions``); with ``resume=True``
+  keys already in the commit log are anti-joined away, so a restarted job
+  rewrites only uncommitted partitions;
+* each successful call publishes ONE parquet commit table under
   ``_commitlog/`` holding a row per completed partition: key, row/byte
   counts, contributing item ids (lineage — the Spark analogue of the
   reference's ``stac_items`` attrs, utils.py:938-947). The table is written
-  distributed (staged, then renamed into place), so no per-partition data
-  ever crosses the driver;
-* ``pending_partitions`` anti-joins the requested partition set against the
-  commit log, so a restarted job recomputes ONLY missing partitions;
+  distributed from a column-pruned read-back of the new files (staged, then
+  renamed into place), so no per-partition data ever crosses the driver;
 * global attrs (query params, engine version — utils.py:907-952
   ``add_attrs``) land in ``_commitlog/_meta.json``; run totals in
   ``_commitlog/runs.jsonl`` (one line per call).
@@ -21,8 +25,7 @@ so this module adds the Iceberg-commit-log idea over plain parquet:
 At 100 TB the commit log is tiny (one row per grid partition, ~10^5 rows
 for a continental cube) and the anti-join is a broadcast. If a real Iceberg
 runtime is on the classpath the same interface maps onto Iceberg snapshots;
-this hand-rolled log keeps the semantics without the jar. (Legacy jsonl
-commit files from older runs are still read.)
+this hand-rolled log keeps the semantics without the jar.
 """
 
 from __future__ import annotations
@@ -58,17 +61,16 @@ def read_meta(path: str) -> dict:
         return json.load(f)
 
 
-def _commit_tables(path: str) -> tuple[list[str], list[str]]:
-    """(parquet commit dirs, legacy jsonl files) in the commit log."""
+def _commit_tables(path: str) -> list[str]:
+    """The parquet commit tables in the commit log, one per published call."""
     d = _log_dir(path)
-    pq, jl = [], []
-    if os.path.isdir(d):
-        for fn in sorted(os.listdir(d)):
-            if fn.startswith("commit-") and fn.endswith(".parquet"):
-                pq.append(os.path.join(d, fn))
-            elif fn.startswith("commit-") and fn.endswith(".jsonl"):
-                jl.append(os.path.join(d, fn))
-    return pq, jl
+    if not os.path.isdir(d):
+        return []
+    return [
+        os.path.join(d, fn)
+        for fn in sorted(os.listdir(d))
+        if fn.startswith("commit-") and fn.endswith(".parquet")
+    ]
 
 
 def committed_partitions(spark: SparkSession, path: str) -> DataFrame:
@@ -76,188 +78,26 @@ def committed_partitions(spark: SparkSession, path: str) -> DataFrame:
 
     Commits are parquet tables (one per successful write call), so this is a
     distributed scan — nothing partition-count-shaped ever crosses the
-    driver. Legacy driver-written jsonl logs are still honored."""
-    pq, jl = _commit_tables(path)
-    parts = []
-    if pq:
-        parts.append(
-            spark.read.parquet(*pq).select("solar_day", "tile_y", "tile_x")
-        )
-    if jl:
-        rows = []
-        for p in jl:
-            with open(p) as f:
-                rows.extend(
-                    (r["solar_day"], r["tile_y"], r["tile_x"])
-                    for r in map(json.loads, f)
-                )
-        parts.append(
-            spark.createDataFrame(rows, "solar_day string, tile_y int, tile_x int")
-        )
-    if not parts:
+    driver."""
+    commits = _commit_tables(path)
+    if not commits:
         return spark.createDataFrame(
             [], "solar_day string, tile_y int, tile_x int"
         ).withColumn("solar_day", F.to_date("solar_day"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.withColumn("solar_day", F.to_date("solar_day")).distinct()
-
-
-def pending_partitions(cube: DataFrame, path: str) -> DataFrame:
-    """Anti-join the cube against the commit log → only not-yet-committed
-    partitions survive. This is the resume path: re-running a failed job
-    skips completed (solar_day, tile_y, tile_x) partitions entirely — and
-    because the mosaic groupBy key EQUALS the partition key, Catalyst prunes
-    the upstream work for committed partitions too when the filter is pushed
-    before the shuffle."""
-    done = committed_partitions(cube.sparkSession, path)
-    if done.isEmpty():
-        return cube
-    return cube.join(F.broadcast(done), PART_COLS, "left_anti")
-
-
-def write_cube(
-    cube: DataFrame,
-    path: str,
-    attrs: dict | None = None,
-    resume: bool = True,
-    expected_partitions: DataFrame | None = None,
-) -> dict:
-    """Write cube tiles partitioned by (solar_day, tile_y, tile_x); after a
-    successful write, the commit log gains one JSON line PER PARTITION with
-    its metrics/lineage. Returns run metrics.
-
-    Resume contract: commit granularity is the WRITE CALL (all partitions of
-    a successful call are logged atomically at its end); resume granularity
-    is the partition — a restarted job anti-joins the log and recomputes only
-    partitions no completed call has covered. Crash between data-write and
-    log-write ⇒ those partitions are recomputed and overwritten idempotently
-    (dynamic partition overwrite), never duplicated. Callers needing
-    finer-grained checkpoints split the input into several write_cube calls
-    (e.g. one per solar_day — the streaming path does exactly this per
-    micro-batch).
-
-    The cube plan is persisted (DISK_ONLY — tile binaries would evict the
-    writers' heap at native tile sizes) across the metrics pass and the data
-    write so the expensive decode/regrid/mosaic pipeline executes ONCE, not
-    twice.
-
-    The per-partition metrics/lineage rows never touch the driver: the
-    aggregation is WRITTEN (distributed) to a staging dir inside the commit
-    log, and publishing a commit is a single rename of that staged parquet
-    table — O(1) driver work at any partition count. The only driver-side
-    numbers are the run totals (partition count, elapsed), one row per call.
-
-    ``expected_partitions`` — a (solar_day, tile_y, tile_x) DataFrame of the
-    partitions this run is REQUESTED to cover, derivable from metadata alone
-    (plans.cube.expected_partitions: scene search x grid assignment, no
-    pixel decode) — switches on the FUSED single-pass path: the cube
-    pipeline executes exactly ONCE straight into the parquet sink (no
-    persist of full planes, no second metrics read of them), and the commit
-    metrics are aggregated from the files just written via a COLUMN-PRUNED
-    read-back (part cols + the tiny precomputed ``data_bytes`` column — the
-    pixel payload column is never touched again). Restricting the read-back
-    to expected-and-not-previously-committed partitions makes it exactly
-    this run's output: every such partition was fully rewritten by this run
-    (dynamic partition overwrite replaces whole partition dirs), so partial
-    files from any earlier crashed run can't leak into a commit. Without
-    ``expected_partitions`` the legacy persist+two-pass path runs.
-    """
-    spark = cube.sparkSession
-    os.makedirs(_log_dir(path), exist_ok=True)
-    if attrs:
-        write_meta(path, attrs)
-    t0 = time.perf_counter()
-    run_id = uuid.uuid4().hex[:12]
-    staging = os.path.join(_log_dir(path), "_staging", run_id)
-    if expected_partitions is not None:
-        return _write_cube_fused(
-            cube, path, expected_partitions, resume, t0, run_id, staging
-        )
-    todo = pending_partitions(cube, path) if resume else cube
-    # DISK_ONLY, not the MEMORY_AND_DISK default: the persisted rows are the
-    # FINAL pixel planes (tile-sized binaries — ~16 MB/row at the native
-    # 2048-px tile), so caching them on-heap next to 32 concurrent parquet
-    # writers OOMs the JVM at sf1.0 (measured); the reuse pattern is
-    # write-once-read-twice (metrics agg + data write), for which local-disk
-    # spill is the scalable level at any cube size
-    from pyspark import StorageLevel
-
-    todo = todo.persist(StorageLevel.DISK_ONLY)
-    try:
-        # per-partition metrics + lineage (A8) in one aggregation, written
-        # as a parquet table (repartition(1): the rows are ~100 B each, so
-        # one file per commit keeps the log compact without bottlenecking
-        # the parallel aggregation that feeds it)
-        (
-            todo.groupBy(*PART_COLS)
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.sum(F.octet_length("data")).alias("bytes"),
-                F.sum("n_scenes").alias("n_scene_tiles"),
-                F.array_join(
-                    F.array_sort(F.collect_set("item_ids")), ";"
-                ).alias("lineage"),
-            )
-            .withColumn("solar_day", F.col("solar_day").cast("string"))
-            .repartition(1)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        n_parts = spark.read.parquet(staging).count()
-        if n_parts == 0:
-            return {"written_partitions": 0, "elapsed_sec": 0.0, "resumed": resume}
-
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # no repartition here: mosaic_take_first already hash-partitions its
-        # output on exactly this write key (write_aligned default), so a
-        # shuffle of the full planes would be pure extra byte movement;
-        # non-mosaic inputs just produce a few more files per partition dir
-        # data_bytes is written here too (not only in the fused path) so a
-        # store with mixed legacy+fused files keeps a uniform schema and the
-        # fused read-back's column-pruned metrics never have to touch the
-        # plane payload column
-        (
-            todo.withColumn("solar_day", F.col("solar_day").cast("string"))
-            .withColumn("data_bytes", F.octet_length("data"))
-            .write.mode("overwrite")
-            .partitionBy(*PART_COLS)
-            .parquet(path)
-        )
-    finally:
-        todo.unpersist()
-    # publish: the staged metrics table BECOMES the commit record atomically;
-    # a crash before this rename leaves only ignorable staging (data
-    # partitions are then recomputed and overwritten idempotently)
-    return _publish_commit(path, staging, run_id, n_parts, t0, resume)
-
-
-def _publish_commit(path: str, staging: str, run_id: str, n_parts: int,
-                    t0: float, resume: bool) -> dict:
-    """Atomic rename of the staged metrics table into the commit log +
-    run-totals bookkeeping (shared by both write paths)."""
-    os.rename(staging, os.path.join(_log_dir(path), f"commit-{run_id}.parquet"))
-    elapsed = time.perf_counter() - t0
-    run_row = {
-        "run_id": run_id,
-        "written_partitions": int(n_parts),
-        "elapsed_sec": round(elapsed, 3),
-        "partitions_per_sec": round(n_parts / elapsed, 3) if elapsed else None,
-        "resumed": resume,
-    }
-    with open(os.path.join(_log_dir(path), "runs.jsonl"), "a") as f:
-        f.write(json.dumps(run_row) + "\n")
-    return run_row
+    return (
+        spark.read.parquet(*commits)
+        .select("solar_day", "tile_y", "tile_x")
+        .withColumn("solar_day", F.to_date("solar_day"))
+        .distinct()
+    )
 
 
 def _preclean_distributed(keys: DataFrame, path: str) -> None:
     """Delete partition directories for the given (solar_day, tile_y,
     tile_x) keys as ONE distributed mapInPandas stage: each task rmtrees
     its batch of keys against the shared store, so driver work is O(1) in
-    the key count (vs the prior per-key driver isdir+rmtree loop — minutes
-    of driver stats at 10^5-10^6 keys before any task launched). Leftover
-    dirs exist only after a crash, so tasks mostly do a single isdir miss.
+    the key count. Leftover dirs exist only after a crash, so tasks mostly
+    do a single isdir miss.
     On an object store the same stage issues batched DeleteObjects calls."""
 
     def rm(batches):
@@ -291,19 +131,56 @@ def _preclean_distributed(keys: DataFrame, path: str) -> None:
     )
 
 
-def _write_cube_fused(
+def write_cube(
     cube: DataFrame,
     path: str,
+    attrs: dict | None = None,
+    resume: bool = True,
+    *,
     expected_partitions: DataFrame,
-    resume: bool,
-    t0: float,
-    run_id: str,
-    staging: str,
 ) -> dict:
-    """Single-pipeline-execution write (see write_cube docstring): data
-    write first (the only pass over pixel planes), then commit metrics from
-    a column-pruned read-back of the written store."""
+    """Write cube tiles partitioned by (solar_day, tile_y, tile_x) and, after
+    a successful write, publish one commit table holding a row per partition
+    with its metrics and lineage. Returns the run totals.
+
+    ``expected_partitions`` is the (solar_day, tile_y, tile_x) set this call
+    is REQUESTED to cover, derived from metadata alone
+    (plans.cube.expected_partitions: scene search x grid assignment, no
+    pixel decode). The cube pipeline executes exactly once, straight into
+    the parquet sink, and the commit metrics are aggregated from a
+    COLUMN-PRUNED read-back of the files just written: partition values plus
+    the small ``data_bytes`` column every file carries, so the plane payload
+    is never read twice.
+
+    Resume contract: commit granularity is the WRITE CALL (all partitions of
+    a successful call are committed atomically at its end); resume
+    granularity is the partition. With ``resume=True`` the run covers only
+    expected keys no completed call has committed; ``resume=False`` rewrites
+    every expected key. Callers needing finer-grained checkpoints split the
+    input into several calls (one per solar day — the per-day job and the
+    streaming path do exactly this).
+
+    Crash safety: a crash between data write and commit leaves only an
+    ignorable ``_staging`` table and uncommitted partition directories.
+    Before writing, the directories of expected-but-uncommitted keys are
+    deleted (a distributed stage), so the read-back is exactly this run's
+    output: crash leftovers never leak into a commit, even for a key that
+    yields zero rows this run. Committed directories are never pre-cleaned;
+    dynamic partition overwrite replaces them only where new rows land.
+
+    The per-partition rows never touch the driver: the aggregation is
+    written (distributed) to the staging dir, and publishing a commit is a
+    single rename of that table. The driver collects only the distinct
+    solar days of the run, to prune the read-back listing.
+    """
     spark = cube.sparkSession
+    os.makedirs(_log_dir(path), exist_ok=True)
+    if attrs:
+        write_meta(path, attrs)
+    t0 = time.perf_counter()
+    run_id = uuid.uuid4().hex[:12]
+    staging = os.path.join(_log_dir(path), "_staging", run_id)
+    nothing = {"written_partitions": 0, "elapsed_sec": 0.0, "resumed": resume}
     done = committed_partitions(spark, path)
     have_commits = not done.isEmpty()
     exp_all = expected_partitions.select(
@@ -311,13 +188,8 @@ def _write_cube_fused(
         F.col("tile_y").cast("int").alias("tile_y"),
         F.col("tile_x").cast("int").alias("tile_x"),
     ).distinct()
-    # UNCOMMITTED expected keys — the only keys whose directories may hold
-    # crash leftovers and may safely be deleted. Committed directories are
-    # NEVER pre-cleaned, in either resume mode: with resume=False the run
-    # rewrites them via dynamic partition overwrite (which replaces a dir
-    # only when new rows actually land), so deleting them up front would
-    # turn a mid-write crash — or a zero-row partition — into silent data
-    # loss that the commit log still records as committed.
+    # UNCOMMITTED expected keys: the only directories that may hold crash
+    # leftovers, and the only ones safe to delete in either resume mode
     uncommitted = (
         exp_all.join(F.broadcast(done), PART_COLS, "left_anti")
         if have_commits
@@ -328,21 +200,17 @@ def _write_cube_fused(
     exp = exp.persist()  # one row per partition key — tiny at any cube size
     try:
         if exp.isEmpty():
-            return {"written_partitions": 0, "elapsed_sec": 0.0, "resumed": resume}
+            return nothing
         todo = cube
         if resume and have_commits:
             todo = todo.join(F.broadcast(done), PART_COLS, "left_anti")
-        # pre-clean leftovers of CRASHED runs under the uncommitted keys:
-        # dynamic partition overwrite only replaces partitions the data
-        # actually contains, so an expected partition that yields ZERO rows
-        # this run would otherwise leave a crashed run's partial files in
-        # place — and the read-back below would commit them as complete.
-        # The delete runs DISTRIBUTED (one mapInPandas stage over the key
-        # DataFrame): no per-key driver filesystem calls, so a 100x-scale
-        # run with 10^5-10^6 partition keys launches tasks immediately
-        # instead of stat-ing the store from the driver first.
+        # dynamic partition overwrite only replaces partitions that get
+        # rows, so a zero-row key would keep a crashed run's partial files
         _preclean_distributed(uncommitted, path)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # no repartition here: mosaic_take_first already hash-partitions its
+        # output on exactly this write key, so a shuffle of the full planes
+        # would be pure extra byte movement
         (
             todo.withColumn("solar_day", F.col("solar_day").cast("string"))
             .withColumn("data_bytes", F.octet_length("data"))
@@ -354,15 +222,9 @@ def _write_cube_fused(
         # pruned to this run's solar days: reading the store root would
         # re-list and footer-read every partition ever written — O(total
         # store) per call, O(N^2) over an N-day per-day/streaming loop.
-        # The expected day set is tiny (one value per day in the run), so
-        # collecting it driver-side and reading only those day directories
-        # bounds the read-back to this run's own output. A day directory
-        # can be absent entirely when every expected tile of that day
-        # produced zero rows (all-nodata scenes) — skipped, and the
-        # zero-days case returns gracefully instead of failing schema
-        # inference on an empty store. Parquet column pruning means the
-        # plane payload column is NEVER read here — only partition values
-        # and the small metric columns.
+        # A day directory is absent when every expected tile of that day
+        # produced zero rows (all-nodata scenes); the zero-days case returns
+        # before schema inference could fail on an empty store.
         days = sorted(
             str(r["solar_day"])
             for r in exp.select("solar_day").distinct().collect()
@@ -372,52 +234,20 @@ def _write_cube_fused(
             if os.path.isdir(p)
         ]
         if not day_paths:
-            return {"written_partitions": 0, "elapsed_sec": 0.0, "resumed": resume}
-        rb0 = (
-            spark.read.option("mergeSchema", "true")
-            .option("basePath", path)
+            return nothing
+        # one repartition(1) file per commit: the rows are ~100 B each, so
+        # the log stays compact without serialising the aggregation
+        (
+            spark.read.option("basePath", path)
             .parquet(*day_paths)
-        )
-        # legacy-path files lack the precomputed data_bytes column. Three
-        # cases: pure-legacy day dirs (column absent from the merged schema
-        # entirely) -> measure the payload column; pure-fused (column
-        # present, no NULLs) -> read only the metric column, planes never
-        # touched; MIXED dirs (transition era: fused files appended beside
-        # pre-change files) -> mergeSchema yields NULL data_bytes for the
-        # legacy rows, so a plain sum would silently understate — coalesce
-        # onto octet_length(data) for exactly those rows. The mixed case is
-        # detected with a cheap probe that scans ONLY the data_bytes column
-        # (all other columns pruned), so the common pure-fused path keeps
-        # its planes-never-read property.
-        if "data_bytes" not in rb0.columns:
-            byte_col = F.octet_length("data").cast("long")
-        elif rb0.where(F.col("data_bytes").isNull()).limit(1).count() > 0:
-            if "data" not in rb0.columns:
-                # NULL data_bytes with no payload column to fall back on
-                # (e.g. metric-only legacy files): summing past the NULLs
-                # would silently understate day bytes — fail loudly instead
-                # (ADVICE r6)
-                raise ValueError(
-                    f"{path}: data_bytes contains NULLs but no 'data' payload "
-                    "column exists to measure — day byte totals would be "
-                    "silently understated"
-                )
-            byte_col = F.coalesce(
-                F.col("data_bytes"), F.octet_length("data").cast("long")
-            )
-        else:
-            byte_col = F.col("data_bytes")
-        rb = (
-            rb0.select(
+            .select(
                 F.to_date(F.col("solar_day").cast("string")).alias("solar_day"),
                 F.col("tile_y").cast("int").alias("tile_y"),
                 F.col("tile_x").cast("int").alias("tile_x"),
-                "n_scenes", "item_ids", byte_col.alias("data_bytes"),
+                "n_scenes", "item_ids", "data_bytes",
             )
             .join(F.broadcast(exp), PART_COLS, "left_semi")
-        )
-        (
-            rb.groupBy(*PART_COLS)
+            .groupBy(*PART_COLS)
             .agg(
                 F.count("*").alias("n_rows"),
                 F.sum("data_bytes").alias("bytes"),
@@ -435,8 +265,20 @@ def _write_cube_fused(
     finally:
         exp.unpersist()
     if n_parts == 0:
-        return {"written_partitions": 0, "elapsed_sec": 0.0, "resumed": resume}
-    return _publish_commit(path, staging, run_id, n_parts, t0, resume)
+        return nothing
+    # publish: the staged metrics table BECOMES the commit record atomically
+    os.rename(staging, os.path.join(_log_dir(path), f"commit-{run_id}.parquet"))
+    elapsed = time.perf_counter() - t0
+    run_row = {
+        "run_id": run_id,
+        "written_partitions": int(n_parts),
+        "elapsed_sec": round(elapsed, 3),
+        "partitions_per_sec": round(n_parts / elapsed, 3) if elapsed else None,
+        "resumed": resume,
+    }
+    with open(os.path.join(_log_dir(path), "runs.jsonl"), "a") as f:
+        f.write(json.dumps(run_row) + "\n")
+    return run_row
 
 
 def read_cube(spark: SparkSession, path: str) -> DataFrame:
@@ -452,16 +294,9 @@ def read_cube(spark: SparkSession, path: str) -> DataFrame:
 def metrics(path: str) -> list[dict]:
     """All commit-log metric records (per-partition) — driver-side audit
     helper (the scale path is ``spark.read.parquet`` over the commit dirs)."""
-    import pyarrow.parquet as pq_mod
+    import pyarrow.parquet as pq
 
-    pq, jl = _commit_tables(path)
-    out = []
-    for p in pq:
-        out.extend(pq_mod.read_table(p).to_pylist())
-    for p in jl:
-        with open(p) as f:
-            out.extend(json.loads(x) for x in f)
-    return out
+    return [r for p in _commit_tables(path) for r in pq.read_table(p).to_pylist()]
 
 
 def runs(path: str) -> list[dict]:

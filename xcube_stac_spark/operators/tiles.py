@@ -215,13 +215,20 @@ def _plane_disk_dir() -> str | None:
     return d
 
 
+# Version of the index-plane spec, hashed into every disk-tier filename: the
+# tier outlives processes and checkouts, so a plane built by older index code
+# must never be served. Bump it whenever _tile_index_planes, _tile_utm_coords,
+# geom.tm_forward or pixel_residue_shift changes.
+PLANE_SPEC = 1
+
+
 def _plane_disk_paths(key: tuple) -> tuple[str, str] | None:
     d = _plane_disk_dir()
     if d is None:
         return None
     import hashlib
 
-    fn = hashlib.sha1(repr(key).encode()).hexdigest()
+    fn = hashlib.sha1(repr((PLANE_SPEC, key)).encode()).hexdigest()
     return os.path.join(d, fn + ".meta.npy"), os.path.join(d, fn + ".planes.npy")
 
 

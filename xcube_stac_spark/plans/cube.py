@@ -115,6 +115,28 @@ def scene_images(
     )
 
 
+def _assigned_images(cat, grid, bbox, time_range, bands, collections, query):
+    """The metadata prelude of build_cube and expected_partitions. Open
+    params are validated up front (params.validate_open_params — the
+    reference's schema.validate_instance seam, store.py:201-205) so a bad
+    bbox/time/band fails HERE with the parameter named, not five stages into
+    the distributed plan; then scene search → image join → grid-tile
+    assignment. Returns the assigned images and the resolved time range."""
+    from xcube_stac_spark.params import validate_open_params
+
+    validate_open_params(
+        bbox=bbox, time_range=time_range, bands=bands,
+        collections=collections, query=query,
+    )
+    if bbox is None:
+        bbox = grid.bbox()
+    if time_range is None:
+        time_range = ("1970-01-01", "2100-01-01")
+    scenes = select_scenes(cat, bbox, time_range, collections, query)
+    imgs = scene_images(cat, scenes, bands)
+    return tiles.assign_grid_tiles(imgs, grid), time_range
+
+
 def expected_partitions(
     cat: SceneCatalog,
     grid: GridSpec,
@@ -127,16 +149,12 @@ def expected_partitions(
     """The (solar_day, tile_y, tile_x) partition keys a build_cube call with
     the same arguments will cover — computed from METADATA ALONE (scene
     search x grid-tile assignment; Catalyst prunes the pixel ``bytes``
-    column out of the scan entirely). Feed this to
-    ``lineage.write_cube(..., expected_partitions=...)`` to enable the
-    fused single-pass write (see its docstring)."""
-    if bbox is None:
-        bbox = grid.bbox()
-    if time_range is None:
-        time_range = ("1970-01-01", "2100-01-01")
-    scenes = select_scenes(cat, bbox, time_range, collections, query)
-    imgs = scene_images(cat, scenes, bands)
-    assigned = tiles.assign_grid_tiles(imgs, grid)
+    column out of the scan entirely). ``lineage.write_cube`` requires these
+    keys: they bound its resume anti-join, crash-leftover pre-clean and
+    commit read-back."""
+    assigned, _ = _assigned_images(
+        cat, grid, bbox, time_range, bands, collections, query
+    )
     return (
         assigned.select("solar_day", F.explode("grid_tiles").alias("t"))
         .select(
@@ -159,25 +177,10 @@ def build_cube(
     with_spine: bool = False,
 ) -> DataFrame:
     """The whole flagship pipeline, lazily planned. ``bbox`` defaults to the
-    grid's own extent (the cube is only ever built on the grid).
-
-    Open params are validated up front (params.validate_open_params — the
-    reference's schema.validate_instance seam, store.py:201-205) so a bad
-    bbox/time/band fails HERE with the parameter named, not five stages into
-    the distributed plan."""
-    from xcube_stac_spark.params import validate_open_params
-
-    validate_open_params(
-        bbox=bbox, time_range=time_range, bands=bands,
-        collections=collections, query=query,
+    grid's own extent (the cube is only ever built on the grid)."""
+    assigned, time_range = _assigned_images(
+        cat, grid, bbox, time_range, bands, collections, query
     )
-    if bbox is None:
-        bbox = grid.bbox()
-    if time_range is None:
-        time_range = ("1970-01-01", "2100-01-01")
-    scenes = select_scenes(cat, bbox, time_range, collections, query)
-    imgs = scene_images(cat, scenes, bands)
-    assigned = tiles.assign_grid_tiles(imgs, grid)
     # large tiles ⇒ pre-build the shared projection planes in one balanced
     # stage (a single 2048-px plane is ~9 s of TM trig; letting decode tasks
     # build them inline duplicates the work across Python workers)
