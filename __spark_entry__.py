@@ -103,13 +103,6 @@ def _q_scene_search_filtered(spark, sf_dir):
     return df.select("item_id", "tile_id", "orbit_state", "proc_version")
 
 
-def _q_solar_day(spark, sf_dir):
-    df = spatial.with_solar_day(_searched(spark, sf_dir))
-    return df.select(
-        "item_id", F.col("solar_day").cast("string").alias("solar_day")
-    )
-
-
 def _q_dedup_latest(spark, sf_dir):
     df = spatial.dedup_latest_version(_searched(spark, sf_dir))
     return df.select(
@@ -188,81 +181,9 @@ def _q_cube_build(spark, sf_dir):
     )
 
 
-def _q_tpch_q1(spark, sf_dir):
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-
-    def dec(c):
-        return F.col(c).cast("decimal(18,4)")
-
-    # decimal accumulation throughout: double sums over 10^4+ currency rows
-    # differ across engines in the rounded digit (summation order)
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum(dec("l_quantity")).cast("double"), 3).alias("sum_qty"),
-            F.round(F.sum(dec("l_extendedprice")).cast("double"), 3).alias("sum_base_price"),
-            F.round(
-                F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))).cast("double"),
-                3,
-            ).alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def _q_tpch_q3ish(spark, sf_dir):
-    """Classic 3-way join + agg (broadcast dims, shuffled fact): revenue of
-    urgent orders per customer segment and order month."""
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    c = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .where(F.col("o_orderpriority") == "1-URGENT")
-        .groupBy(
-            "c_mktsegment",
-            F.date_format("o_orderdate", "yyyy-MM").alias("order_month"),
-        )
-        .agg(
-            # exact decimal accumulation: double sums of ~10^3 terms differ
-            # between engines in the last rounded digit (summation order)
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice").cast("decimal(18,4)")
-                    * (F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)"))
-                ).cast("double"),
-                3,
-            ).alias("revenue"),
-            F.countDistinct("o_orderkey").alias("n_orders"),
-        )
-    )
-
-
 def _q_data_ids(spark, sf_dir):
     """S7 data-id enumeration with selected attrs (store.py:131-146)."""
     return _cat(spark, sf_dir).data_ids(["tile_id", "proc_version"])
-
-
-def _q_distinct_formats(spark, sf_dir):
-    """A6/F10 distinct formats+bands in the corpus (utils.py:559-570)."""
-    return (
-        _cat(spark, sf_dir).assets()
-        .groupBy("fmt", "band")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def _q_events_daily(spark, sf_dir):
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return (
-        ev.groupBy(F.to_date("ts").cast("string").alias("day"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 3).alias("total_value"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -520,7 +441,6 @@ def _q_layout_append(spark, sf_dir):
     only, base partitions untouched, mtime-pinned by test). The probe spans
     both batches, so the result equals the base-table recompute — oracle =
     spatial_join_region's SQL verbatim."""
-    import shutil
     import tempfile
 
     cat = _cat(spark, sf_dir)
@@ -529,10 +449,6 @@ def _q_layout_append(spark, sf_dir):
         tempfile.gettempdir(),
         f"xss_scene_layout_append_{os.path.basename(os.path.normpath(sf_dir))}",
     )
-    # fresh dir per run: a session that ran a cube write has
-    # partitionOverwriteMode=dynamic, under which the base overwrite would
-    # leave stale partitions from a previous invocation
-    shutil.rmtree(path, ignore_errors=True)
     t = F.coalesce(F.col("datetime"), F.col("start_datetime"))
     base = scenes.where(F.dayofmonth(t) % 2 == 0)
     later = scenes.where(F.dayofmonth(t) % 2 == 1)
@@ -944,9 +860,6 @@ WHERE NOT (bbox_xmax < {x0} OR bbox_xmin > {x1} OR bbox_ymax < {y0} OR bbox_ymin
   AND orbit_state IN ('descending')
   AND proc_version IN ('05.00', '05.11')
 """
-    sqls["solar_day"] = (
-        f"WITH {_SEARCH_CTE.strip()}, {_SOLAR_CTE.strip()} SELECT item_id, solar_day FROM solar"
-    )
     sqls["dedup_latest"] = f"""
 WITH {_SEARCH_CTE.strip()}, {_SOLAR_CTE.strip()},
 ranked AS (
@@ -1060,26 +973,6 @@ FROM read_parquet('{SYNTH_SF001}/images.parquet') i
 JOIN read_parquet('{SYNTH_SF001}/assets.parquet') a ON a.image_id = i.image_id
 JOIN s ON s.item_id = a.item_id
 """
-    sqls["tpch_q1"] = """
-SELECT l_returnflag, l_linestatus,
-       round(cast(sum(l_quantity::decimal(18,4)) AS double), 3) AS sum_qty,
-       round(cast(sum(l_extendedprice::decimal(18,4)) AS double), 3) AS sum_base_price,
-       round(cast(sum(l_extendedprice::decimal(18,4) * (1 - l_discount::decimal(18,4))) AS double), 3) AS sum_disc_price,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-    sqls["tpch_q3ish"] = """
-SELECT c.c_mktsegment, strftime(o.o_orderdate, '%Y-%m') AS order_month,
-       round(cast(sum(l.l_extendedprice::decimal(18,4) * (1 - l.l_discount::decimal(18,4))) AS double), 3) AS revenue,
-       count(DISTINCT o.o_orderkey) AS n_orders
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-WHERE o.o_orderpriority = '1-URGENT'
-GROUP BY 1, 2
-"""
     sqls["data_ids"] = f"""
 SELECT item_id, tile_id, proc_version FROM {_SCENES}
 """
@@ -1094,16 +987,6 @@ SELECT item_id AS data_id,
             ELSE NULL END AS t_end,
        proj_code AS crs
 FROM {_SCENES}
-"""
-    sqls["distinct_formats"] = f"""
-SELECT fmt, band, count(*) AS n
-FROM read_parquet('{SYNTH_SF001}/assets.parquet') GROUP BY fmt, band
-"""
-    sqls["events_daily"] = """
-SELECT strftime(cast(ts AS date), '%Y-%m-%d') AS day, event_type,
-       count(*) AS n,
-       round(cast(sum(value::decimal(18,4)) AS double), 3) AS total_value
-FROM events GROUP BY 1, 2
 """
     # stratified_sample: integer-threshold compare in hash space — the
     # thresholds are the EXACT floor(rate*2^32) literals the Spark operator

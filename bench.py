@@ -97,7 +97,7 @@ def run_bench() -> dict:
     qs = entry_mod.queries() if RUN_QUERIES else {}
     for name in [] if not RUN_QUERIES else [
         "scene_search", "dedup_latest", "cell_cover", "spatial_join_region",
-        "knn_tiles", "bbox_union", "lineage", "dedup_resolve", "events_daily",
+        "knn_tiles", "bbox_union", "lineage", "dedup_resolve",
         "exact_dedup", "minhash_near_dup", "ngram_jaccard", "ann_topk",
         "ann_lsh_topk", "ann_ivf_topk", "embedding_clusters", "image_stats",
         "audio_features", "video_frames", "rectify_swath_nc",
@@ -105,9 +105,7 @@ def run_bench() -> dict:
         "pack_sequences", "decontaminate", "stratified_sample",
         "repetition_metrics", "image_near_dup",
     ]:
-        # retired-but-pinned queries (displaced from the 50-cap registry)
-        # keep their bench line via the underlying module function
-        fn = qs.get(name) or getattr(entry_mod, f"_q_{name}")
+        fn = qs[name]
         q_runs = []
         for _ in range(REPEATS):
             t0 = time.perf_counter()

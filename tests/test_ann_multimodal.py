@@ -370,74 +370,6 @@ def test_near_dup_boundary_recall_meets_target():
     assert collide < 0.01, collide
 
 
-def test_band_layout_probe_prunes_partitions_and_matches_lsh(spark, tmp_path):
-    """At-rest (band, key) layout: probe result == in-memory lsh_topk, and
-    the probe's scan is PARTITION-PRUNED (PartitionFilters on band/key)."""
-    import io
-    from contextlib import redirect_stdout
-
-    emb = entry_mod._emb(spark, SF_DIR)
-    queries = entry_mod._ann_queries_df(spark, SF_DIR)
-    path = str(tmp_path / "emb_layout")
-    ann_op.write_band_layout(emb, path)
-    got = ann_op.probe_band_layout(spark, path, queries, k=entry_mod.ANN_K)
-    exp = ann_op.lsh_topk(emb, queries, k=entry_mod.ANN_K)
-    key = lambda r: (r.query_id, r.rank)
-    g = sorted(((r.query_id, r.rank, r.vec_id, r.cos_sim) for r in got.collect()))
-    e = sorted(((r.query_id, r.rank, r.vec_id, r.cos_sim) for r in exp.collect()))
-    assert g == e and g
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        got.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "band" in plan
-    # pruning is real: the scan must NOT read all bands*2^bits directories
-    import re
-
-    m = re.search(r"partitions read: (\d+)", plan)
-    if m:  # formatted plans expose the pruned partition count
-        n_meta = ann_op.read_band_layout_meta(path)
-        assert int(m.group(1)) < n_meta["bands"] * (1 << n_meta["bits"])
-
-
-def test_ivf_layout_probe_prunes_partitions_and_matches_ivf(spark, tmp_path):
-    """At-rest cluster layout: probe result == in-memory ivf_topk, and the
-    probe's scan is PARTITION-PRUNED (PartitionFilters on cluster)."""
-    emb = entry_mod._emb(spark, SF_DIR).select("vec_id", "embedding")
-    queries = entry_mod._ann_queries_df(spark, SF_DIR)
-    path = str(tmp_path / "ivf_layout")
-    ann_op.write_ivf_layout(emb, path)
-    got = ann_op.probe_ivf_layout(spark, path, queries, k=entry_mod.ANN_K)
-    exp = ann_op.ivf_topk(emb, queries, k=entry_mod.ANN_K)
-    g = sorted(((r.query_id, r.rank, r.vec_id, r.cos_sim) for r in got.collect()))
-    e = sorted(((r.query_id, r.rank, r.vec_id, r.cos_sim) for r in exp.collect()))
-    assert g == e and g
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        got.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "cluster" in plan
-    import re
-
-    m = re.search(r"partitions read: (\d+)", plan)
-    if m:
-        # exactly the union of the queries' probed cells, never the full corpus
-        import json
-        import os
-
-        with open(os.path.join(path, "_ivf_meta.json")) as f:
-            C = np.asarray(json.load(f)["centroids"])
-        probed = set()
-        for r in queries.collect():
-            qv = np.asarray(r.qvec, np.float64)
-            d = ((C - qv) ** 2).sum(axis=1)
-            probed |= set(np.argsort(d, kind="stable")[: ann_op.IVF_NPROBE].tolist())
-        assert int(m.group(1)) == len(probed) <= ann_op.IVF_K
-
-
 def test_rgb_rows_decode_channel_major_and_verify(spark):
     """RGB multimodal rows rotate over every color-capable container
     (png/tiff/cog lossless, jpeg 4:2:0 lossy, webp VP8L 8-bit-mapped), all
@@ -502,133 +434,9 @@ def test_assign_l2_chunked_is_bit_identical():
     assert ann_op._assign_l2(V, C) is not None
 
 
-def test_band_and_ivf_layout_append(spark, tmp_path):
-    """Incremental ANN layouts: base write + append of a held-out slice ==
-    probe results of a single full write (same deterministic hyperplanes /
-    codebook); pre-existing partition FILES are untouched by the append."""
-    import glob
-    import os
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    base = emb.where(F.col("vec_id") % 5 != 0)
-    extra = emb.where(F.col("vec_id") % 5 == 0)
-    queries = (
-        emb.where(F.col("vec_id").isin([0, 1, 2]))
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    )
-
-    full_p, inc_p = str(tmp_path / "band_full"), str(tmp_path / "band_inc")
-    ann_op.write_band_layout(emb, full_p, bands=4, bits=8)
-    ann_op.write_band_layout(base, inc_p, bands=4, bits=8)
-    pre_files = {
-        f: os.path.getmtime(f)
-        for f in glob.glob(os.path.join(inc_p, "band=*", "key=*", "*.parquet"))
-    }
-    ann_op.append_band_layout(extra, inc_p)
-    for f, m in pre_files.items():
-        assert os.path.getmtime(f) == m, f"append rewrote {f}"
-    k = lambda df: {
-        (r.query_id, r.vec_id, r.cos_sim, r.rank) for r in df.collect()
-    }
-    assert k(ann_op.probe_band_layout(spark, inc_p, queries, k=5)) == k(
-        ann_op.probe_band_layout(spark, full_p, queries, k=5)
-    )
-
-    ivf_full, ivf_inc = str(tmp_path / "ivf_full"), str(tmp_path / "ivf_inc")
-    ann_op.write_ivf_layout(emb, ivf_full, n_clusters=8)
-    # incremental: train on the FULL corpus semantics is the generational
-    # rebuild; here base-trained codebook + appended vectors must equal a
-    # full write that used the same codebook — pin by copying the meta
-    ann_op.write_ivf_layout(base, ivf_inc, n_clusters=8)
-    import json
-
-    with open(os.path.join(ivf_inc, "_ivf_meta.json")) as f:
-        C_inc = json.load(f)["centroids"]
-    pre = {
-        f: os.path.getmtime(f)
-        for f in glob.glob(os.path.join(ivf_inc, "cluster=*", "*.parquet"))
-    }
-    ann_op.append_ivf_layout(extra, ivf_inc)
-    for f, m in pre.items():
-        assert os.path.getmtime(f) == m
-    # probe the incremental layout with full nprobe == n_clusters: result
-    # must equal brute-force cosine top-k over the whole corpus
-    got = k(ann_op.probe_ivf_layout(spark, ivf_inc, queries, k=5, nprobe=8))
-    want = k(ann_op.brute_force_topk(emb, queries, k=5))
-    assert got == want
-    assert C_inc  # meta survived the append
-
-
-def test_band_and_ivf_layout_compact(spark, tmp_path):
-    """Generational compaction for the ANN layouts (mirrors
-    compact_scene_layout): folding an append-accumulated layout into a new
-    generation keeps the probe row-identical, never rewrites the source
-    generation's files (atomic switch-by-path, no in-place rewrite), does
-    not lose the codebook/hyperplane meta, reduces (or holds) the per-
-    partition file count, and preserves the append manifest for audit."""
-    import glob
-    import json
-    import os
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    base = emb.where(F.col("vec_id") % 5 != 0)
-    extra = emb.where(F.col("vec_id") % 5 == 0)
-    queries = (
-        emb.where(F.col("vec_id").isin([0, 1, 2]))
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    )
-    k = lambda df: {(r.query_id, r.vec_id, r.cos_sim, r.rank) for r in df.collect()}
-
-    band_p, band_g2 = str(tmp_path / "band"), str(tmp_path / "band_gen2")
-    ann_op.write_band_layout(base, band_p, bands=4, bits=8)
-    ann_op.append_band_layout(extra, band_p)
-    want_band = k(ann_op.probe_band_layout(spark, band_p, queries, k=5))
-    src_files = {
-        f: os.path.getmtime(f)
-        for f in glob.glob(os.path.join(band_p, "band=*", "key=*", "*.parquet"))
-    }
-    ann_op.compact_band_layout(spark, band_p, band_g2)
-    for f, m in src_files.items():
-        assert os.path.getmtime(f) == m, f"compaction rewrote source file {f}"
-    assert k(ann_op.probe_band_layout(spark, band_g2, queries, k=5)) == want_band
-    assert ann_op.read_band_layout_meta(band_g2) == ann_op.read_band_layout_meta(band_p)
-    assert os.path.exists(os.path.join(band_g2, "_appends_compacted.jsonl"))
-    # per-partition file count shrinks back to one file set
-    def max_files(root, pat):
-        dirs = glob.glob(os.path.join(root, pat))
-        return max((len(glob.glob(os.path.join(d, "*.parquet"))) for d in dirs), default=0)
-
-    assert max_files(band_g2, "band=*/key=*") <= max_files(band_p, "band=*/key=*")
-
-    ivf_p, ivf_g2 = str(tmp_path / "ivf"), str(tmp_path / "ivf_gen2")
-    ann_op.write_ivf_layout(base, ivf_p, n_clusters=8)
-    ann_op.append_ivf_layout(extra, ivf_p)
-    want_ivf = k(ann_op.probe_ivf_layout(spark, ivf_p, queries, k=5, nprobe=8))
-    src_files = {
-        f: os.path.getmtime(f)
-        for f in glob.glob(os.path.join(ivf_p, "cluster=*", "*.parquet"))
-    }
-    ann_op.compact_ivf_layout(spark, ivf_p, ivf_g2)
-    for f, m in src_files.items():
-        assert os.path.getmtime(f) == m, f"compaction rewrote source file {f}"
-    assert k(ann_op.probe_ivf_layout(spark, ivf_g2, queries, k=5, nprobe=8)) == want_ivf
-    with open(os.path.join(ivf_p, "_ivf_meta.json")) as f:
-        m_src = json.load(f)
-    with open(os.path.join(ivf_g2, "_ivf_meta.json")) as f:
-        m_dst = json.load(f)
-    assert m_src == m_dst  # codebook carried over verbatim, no retrain
-    assert os.path.exists(os.path.join(ivf_g2, "_appends_compacted.jsonl"))
-    assert max_files(ivf_g2, "cluster=*") <= max_files(ivf_p, "cluster=*")
-
-
-def test_scene_layout_append_and_compact(spark, tmp_path):
+def test_scene_layout_append(spark, tmp_path):
     """Incremental spatial layout: base + appended later days == full
-    rebuild under the probe; old partition files untouched; compaction
-    into a new generation preserves the probe and reduces file count."""
+    rebuild under the probe; old partition files untouched."""
     import glob
     import os
 
@@ -657,45 +465,6 @@ def test_scene_layout_append_and_compact(spark, tmp_path):
     region, tr = em.REGION, em.TIME_RANGE
     want = key(sp.probe_scene_layout(spark, full_p, region, time_range=tr))
     assert key(sp.probe_scene_layout(spark, inc_p, region, time_range=tr)) == want
-    # manifest recorded the batch
-    with open(os.path.join(inc_p, "_appends.jsonl")) as f:
-        assert sum(1 for _ in f) == 1
-    # compact into a new generation: same probe, fewer files per partition
-    gen2 = str(tmp_path / "sl_gen2")
-    sp.compact_scene_layout(spark, inc_p, gen2)
-    assert key(sp.probe_scene_layout(spark, gen2, region, time_range=tr)) == want
-    n_inc = len(glob.glob(os.path.join(inc_p, "pcell=*", "*.parquet")))
-    n_gen2 = len(glob.glob(os.path.join(gen2, "pcell=*", "*.parquet")))
-    assert n_gen2 <= n_inc
-
-
-def test_sq8_quantized_topk_recall_and_types(spark):
-    """SQ8 scalar quantization (the 4-8x memory/IO lever for 10^12-vector
-    serving): int8 storage type on the wire, NumPy-exact quantization rule,
-    and >= 0.9 recall@10 of the exact-float top-10 when ranking runs
-    entirely on the int8 representation."""
-    emb = entry_mod._emb(spark, SF_DIR).select("vec_id", "embedding")
-    q = entry_mod._ann_queries_df(spark, SF_DIR)
-    quant = ann_op.sq8_quantize(emb)
-    # storage really is int8 + one float scale
-    dt = dict(quant.dtypes)
-    assert dt["qvec8"] == "array<tinyint>" and dt["qscale"] == "float"
-    # NumPy twin of the quantization rule (HALF-even round like F.round? —
-    # F.round is HALF_UP; verify against the exact column values instead)
-    r = quant.orderBy("vec_id").first()
-    v = np.asarray(r.embedding, np.float64)
-    mx = max(np.abs(v).max(), 1e-30)
-    x = v * 127.0 / mx
-    exp = (np.sign(x) * np.floor(np.abs(x) + 0.5)).astype(np.int8)  # HALF_UP
-    np.testing.assert_array_equal(np.asarray(r.qvec8, np.int8), exp)
-    assert abs(r.qscale - mx / 127.0) < 1e-9
-
-    got = ann_op.sq8_topk(quant, q, k=10).collect()
-    exact = ann_op.brute_force_topk(emb, q, k=10).collect()
-    truth = {(r.query_id, r.vec_id) for r in exact}
-    pred = {(r.query_id, r.vec_id) for r in got}
-    recall = len(pred & truth) / len(truth)
-    assert recall >= 0.9, recall
 
 
 def test_image_near_dup_collapse_and_banding(spark):
@@ -731,135 +500,3 @@ def test_image_near_dup_collapse_and_banding(spark):
     # nearer variants c1/b1 — hamming 2/4 — which is correct)
     assert frozenset({"a1", "f1"}) not in got
     assert pairs[("c1", "f1") if ("c1", "f1") in pairs else ("f1", "c1")].hamming == 2
-
-
-def test_pq_adc_topk_recall_compression_and_determinism(spark):
-    """Product quantization (the 32x at-rest lever past SQ8's 4x): codes
-    are m=8 single bytes, ADC+exact-refine recall@10 >= 0.9 vs the float
-    brute force, codebooks deterministic across invocations, and every
-    code addresses a real codebook row."""
-    emb = entry_mod._emb(spark, SF_DIR).select("vec_id", "embedding")
-    q = entry_mod._ann_queries_df(spark, SF_DIR)
-    C = ann_op.pq_train(emb)
-    C2 = ann_op.pq_train(emb)
-    np.testing.assert_array_equal(C, C2)
-    assert C.shape == (ann_op.PQ_M, ann_op.PQ_KSUB, ann_op.EMB_DIM // ann_op.PQ_M)
-
-    enc = ann_op.pq_encode(emb, C)
-    assert dict(enc.dtypes)["pq_code"] == "array<tinyint>"
-    import pyspark.sql.functions as SF
-    mx = enc.select(SF.array_max("pq_code").alias("m"), SF.array_min("pq_code").alias("n")).agg(
-        SF.max("m"), SF.min("n")).first()
-    # codes are zero-point-offset by -128 so ksub=256 fits signed tinyint:
-    # stored value s addresses codebook row s+128, which must be in [0, ksub)
-    assert 0 <= mx[1] + 128 and mx[0] + 128 < ann_op.PQ_KSUB
-
-    got = ann_op.pq_topk(enc, q, C, k=10, refine=4).collect()
-    exact = ann_op.brute_force_topk(emb, q, k=10).collect()
-    truth = {(r.query_id, r.vec_id) for r in exact}
-    pred = {(r.query_id, r.vec_id) for r in got}
-    recall = len(pred & truth) / len(truth)
-    assert recall >= 0.9, recall
-
-
-def test_ivfpq_full_probe_equals_brute_force_and_recall(spark):
-    """IVFADC (coarse cells + residual PQ + ADC + exact refine): at full
-    probe with a corpus-covering shortlist the result must EQUAL brute
-    force row-for-row (refine restores exact ranking once coverage is
-    total); at serving defaults (nprobe=3 of 8 cells) recall@10 must be
-    AT LEAST plain IVF's at the same nprobe — the residual-PQ + exact-
-    refine tier may not lose recall vs the coarse ceiling (measured: both
-    0.767 on this corpus) — with an absolute floor of 0.75; build is
-    deterministic and codes address real codebook rows."""
-    emb = entry_mod._emb(spark, SF_DIR).select("vec_id", "embedding")
-    q = entry_mod._ann_queries_df(spark, SF_DIR)
-    n = emb.count()
-
-    built = ann_op.ivfpq_build(emb)
-    built2 = ann_op.ivfpq_build(emb)
-    np.testing.assert_array_equal(built[0], built2[0])
-    np.testing.assert_array_equal(built[1], built2[1])
-    enc = built[2]
-    assert dict(enc.dtypes)["pq_code"] == "array<tinyint>"
-    import pyspark.sql.functions as SF
-    rng = enc.select(
-        SF.max(SF.array_max("pq_code")).alias("mx"),
-        SF.min(SF.array_min("pq_code")).alias("mn"),
-        SF.countDistinct("cluster").alias("nc"),
-    ).first()
-    assert 0 <= rng.mn + 128 and rng.mx + 128 < ann_op.PQ_KSUB
-    assert 1 <= rng.nc <= ann_op.IVF_K
-
-    # full probe + corpus-covering shortlist == exact brute force
-    full = ann_op.ivfpq_topk(
-        emb, q, k=10, nprobe=ann_op.IVF_K, refine=(n // 10) + 1, built=built
-    )
-    exact = ann_op.brute_force_topk(emb, q, k=10)
-    got = {(r.query_id, r.rank): (r.vec_id, r.cos_sim) for r in full.collect()}
-    want = {(r.query_id, r.rank): (r.vec_id, r.cos_sim) for r in exact.collect()}
-    assert got == want
-
-    # serving defaults: recall@10 vs exact truth, held to the plain-IVF
-    # ceiling at the same nprobe (residual PQ + refine must be lossless
-    # past the coarse probe) and an absolute floor
-    truth = {(r.query_id, r.vec_id) for r in exact.collect()}
-    pred = {(r.query_id, r.vec_id) for r in ann_op.ivfpq_topk(emb, q, built=built).collect()}
-    ivf = {(r.query_id, r.vec_id) for r in ann_op.ivf_topk(emb, q, 10).collect()}
-    r_pq = len(pred & truth) / len(truth)
-    r_ivf = len(ivf & truth) / len(truth)
-    assert r_pq >= r_ivf, (r_pq, r_ivf)
-    assert r_pq >= 0.75, r_pq
-
-
-def test_ivfpq_layout_write_append_compact_probe(spark, tmp_path):
-    """IVFADC at-rest layout: (a) full-probe + corpus-covering refine from
-    the layout EQUALS brute force (write path and probe machinery exact);
-    (b) appends encode with the base generation's codebooks and the
-    appended corpus still probes exactly; (c) the serving-default probe is
-    a PARTITION-PRUNED scan; (d) compaction keeps the probe row-identical
-    and never rewrites the source generation's files."""
-    import glob
-    import io
-    import os
-    from contextlib import redirect_stdout
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    base = emb.where(F.col("vec_id") % 5 != 0)
-    extra = emb.where(F.col("vec_id") % 5 == 0)
-    queries = entry_mod._ann_queries_df(spark, SF_DIR)
-    n = emb.count()
-    k = lambda df: {(r.query_id, r.vec_id, r.cos_sim, r.rank) for r in df.collect()}
-    full = dict(k=10, nprobe=ann_op.IVF_K, refine=(n // 10) + 1)
-
-    path = str(tmp_path / "ivfpq")
-    ann_op.write_ivfpq_layout(base, path)
-    assert k(ann_op.probe_ivfpq_layout(spark, path, queries, **full)) == k(
-        ann_op.brute_force_topk(base, queries, k=10)
-    )
-
-    ann_op.append_ivfpq_layout(extra, path)
-    assert k(ann_op.probe_ivfpq_layout(spark, path, queries, **full)) == k(
-        ann_op.brute_force_topk(emb, queries, k=10)
-    )
-
-    serve = ann_op.probe_ivfpq_layout(spark, path, queries)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        serve.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "cluster" in plan
-    want = k(serve)
-
-    g2 = str(tmp_path / "ivfpq_gen2")
-    src_files = {
-        f: os.path.getmtime(f)
-        for f in glob.glob(os.path.join(path, "cluster=*", "*.parquet"))
-    }
-    assert src_files
-    ann_op.compact_ivfpq_layout(spark, path, g2)
-    for f, m in src_files.items():
-        assert os.path.getmtime(f) == m, f"compaction rewrote source file {f}"
-    assert k(ann_op.probe_ivfpq_layout(spark, g2, queries)) == want
-    assert os.path.exists(os.path.join(g2, "_appends_compacted.jsonl"))

@@ -53,12 +53,7 @@ def test_entry_smoke(spark):
 #: driver caps correctness rows at 50) but still pinned here every run,
 #: against the oracle text that stays in oracle_sql()
 RETIRED_SQL = {
-    "tpch_q3ish": "_q_tpch_q3ish",
-    "tpch_q1": "_q_tpch_q1",
-    "events_daily": "_q_events_daily",
     "data_ids": "_q_data_ids",
-    "distinct_formats": "_q_distinct_formats",
-    "solar_day": "_q_solar_day",
 }
 
 

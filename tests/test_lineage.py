@@ -39,11 +39,16 @@ def _digest(spark, path):
 
 def test_write_resume_roundtrip(spark, small_cube, small_expected, tmp_path):
     out = str(tmp_path / "cube")
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(mode_key)
+    assert mode.upper() == "STATIC"  # no earlier write left dynamic set
     m1 = lineage.write_cube(
         small_cube, out, attrs={"bands": BANDS, "time_range": TR},
         expected_partitions=small_expected,
     )
     assert m1["written_partitions"] > 0
+    # the dynamic overwrite is per write: the caller's session is unchanged
+    assert spark.conf.get(mode_key) == mode
     # resume: everything committed → nothing to do
     m2 = lineage.write_cube(small_cube, out, expected_partitions=small_expected)
     assert m2["written_partitions"] == 0
@@ -116,7 +121,7 @@ def test_crash_between_data_and_commit_is_resumable(
     spark, small_cube, small_expected, tmp_path, monkeypatch
 ):
     """A write that dies after its data files land but before the commit
-    rename records no commit; its staged table is ignored, and a resumed
+    rename records no commit and removes its staged table, and a resumed
     rerun commits every expected partition with the same stored planes as a
     clean write."""
     out = str(tmp_path / "crash")
@@ -132,7 +137,7 @@ def test_crash_between_data_and_commit_is_resumable(
         with pytest.raises(OSError, match="injected crash"):
             lineage.write_cube(small_cube, out, expected_partitions=small_expected)
     assert lineage.read_cube(spark, out).count() > 0  # the data landed
-    assert os.listdir(os.path.join(lineage._log_dir(out), "_staging"))
+    assert not os.listdir(os.path.join(lineage._log_dir(out), "_staging"))
     assert lineage.committed_partitions(spark, out).count() == 0
     assert lineage.metrics(out) == [] and lineage.runs(out) == []
 

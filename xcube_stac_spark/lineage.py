@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -160,10 +161,11 @@ def write_cube(
     input into several calls (one per solar day — the per-day job and the
     streaming path do exactly this).
 
-    Crash safety: a crash between data write and commit leaves only an
-    ignorable ``_staging`` table and uncommitted partition directories.
-    Before writing, the directories of expected-but-uncommitted keys are
-    deleted (a distributed stage), so the read-back is exactly this run's
+    Crash safety: a crash between data write and commit leaves only
+    uncommitted partition directories. A run that publishes no commit
+    removes its own ``_staging`` table; a killed process can still leave
+    one, which no reader looks at. Before writing, the directories of
+    expected-but-uncommitted keys are deleted (a distributed stage), so the read-back is exactly this run's
     output: crash leftovers never leak into a commit, even for a key that
     yields zero rows this run. Committed directories are never pre-cleaned;
     dynamic partition overwrite replaces them only where new rows land.
@@ -207,14 +209,15 @@ def write_cube(
         # dynamic partition overwrite only replaces partitions that get
         # rows, so a zero-row key would keep a crashed run's partial files
         _preclean_distributed(uncommitted, path)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # no repartition here: mosaic_take_first already hash-partitions its
         # output on exactly this write key, so a shuffle of the full planes
-        # would be pure extra byte movement
+        # would be pure extra byte movement. The overwrite mode is set on
+        # this write only; the caller's session keeps its own.
         (
             todo.withColumn("solar_day", F.col("solar_day").cast("string"))
             .withColumn("data_bytes", F.octet_length("data"))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*PART_COLS)
             .parquet(path)
         )
@@ -264,10 +267,15 @@ def write_cube(
         n_parts = spark.read.parquet(staging).count()
     finally:
         exp.unpersist()
+    try:
+        # publish: the staged metrics table BECOMES the commit record atomically
+        if n_parts:
+            os.rename(staging, os.path.join(_log_dir(path), f"commit-{run_id}.parquet"))
+    finally:
+        # a run that publishes nothing removes its own staged table
+        shutil.rmtree(staging, ignore_errors=True)
     if n_parts == 0:
         return nothing
-    # publish: the staged metrics table BECOMES the commit record atomically
-    os.rename(staging, os.path.join(_log_dir(path), f"commit-{run_id}.parquet"))
     elapsed = time.perf_counter() - t0
     run_row = {
         "run_id": run_id,

@@ -17,10 +17,11 @@ the similarity-search component a 100 TB training-data pipeline needs.
   p = 1 - θ/π (θ = the pair's angle), so each band shrinks the candidate
   set ~2^bits× for unrelated vectors while near-duplicates (θ→0, p→1)
   collide in at least one of the B bands with high probability
-  (recall = 1-(1-p^bits)^B). At 10^12 vectors the table is written
-  bucketed/partitioned by (band, key) so probes are partition-pruned
-  scans, no shuffle; ``bits`` scales with log2(n) to hold per-bucket
-  occupancy constant.
+  (recall = 1-(1-p^bits)^B); ``bits`` scales with log2(n) to hold
+  per-bucket occupancy constant.
+* ``ivf_train`` / ``ivf_topk`` — the coarse-quantizer path: a
+  deterministic sample-based k-means codebook, then exact cosine over the
+  candidates in each query's ``nprobe`` nearest cells.
 
 Hyperplanes are md5-derived ±1 vectors (deterministic, library-free) so the
 DuckDB oracle reproduces the exact same keys; all scoring is double
@@ -126,7 +127,6 @@ def hyperplane_bands(
     dim: int = EMB_DIM,
 ) -> DataFrame:
     """(id, band, key) — one row per (vector, band), the LSH bucket table.
-    At rest this is what the corpus is bucketed/partitioned by.
 
     All bands*bits sign bits come from ONE Arrow-batched matmul per batch
     (bit i of band b = sign of <vec, plane_{b,i}>). The previous
@@ -195,9 +195,6 @@ def lsh_topk(
 # IVF: deterministic coarse-quantizer partitioned search (the second scale
 # path the training-data brief names alongside LSH: partition the corpus by
 # a small k-means codebook, probe only the nprobe nearest cells).
-# write_ivf_layout/probe_ivf_layout materialize the at-rest form (corpus
-# partitioned by cluster, probes = partition-pruned scans), mirroring the
-# LSH write_band_layout contract.
 # ---------------------------------------------------------------------------
 
 IVF_K = 8
@@ -319,8 +316,8 @@ def ivf_train(
     * Lloyd runs in NumPy over the sample with HALF_UP-rounded means
       (absorbs summation-order float noise → bit-identical codebooks on
       any engine fed the same sample set);
-    * the final FULL-corpus assignment happens in the caller
-      (ivf_topk / write_ivf_layout) — exactly one distributed pass.
+    * the final FULL-corpus assignment happens in the caller (ivf_topk,
+      or the ``embedding_clusters`` query) — exactly one distributed pass.
 
     Prior design (4 full-corpus Lloyd passes) is retired: correct but a
     toy-scale trainer at 10^12 vectors (round-3 verdict, What's wrong #1).
@@ -349,10 +346,7 @@ def ivf_topk(
     """IVF ANN: train the codebook, partition the corpus by cluster id, and
     rank only the candidates in each query's nprobe nearest cells by exact
     cosine. Same output shape as lsh_topk/brute_force_topk; recall < 1 by
-    design — at rest the corpus is written partitioned by ``cluster`` so a
-    probe scans nprobe/n_clusters of the data (write_ivf_layout /
-    probe_ivf_layout, partition pruning asserted by test).
-    ``nprobe == n_clusters`` degenerates to exhaustive search and must equal
+    design. ``nprobe == n_clusters`` degenerates to exhaustive search and must equal
     brute_force_topk exactly (pinned by test)."""
     C = ivf_train(embeddings, k=n_clusters, iters=iters)
     corpus = parallelize_scan(embeddings, key="vec_id").withColumn(
@@ -366,128 +360,6 @@ def ivf_topk(
         F.col("vec_id") != F.col("query_id")
     )
     scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("embedding"), F.col("qvec")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def write_ivf_layout(
-    embeddings: DataFrame,
-    path: str,
-    n_clusters: int = IVF_K,
-    iters: int = IVF_ITERS,
-) -> None:
-    """Materialize the IVF at-rest layout: train the codebook once, write
-    the corpus partitioned by cluster id, and persist the centroids beside
-    it. A probe then reads nprobe/n_clusters of the data as a
-    PARTITION-PRUNED SCAN — no join against the base table, no shuffle."""
-    import json
-    import os
-
-    C = ivf_train(embeddings, k=n_clusters, iters=iters)
-    (
-        embeddings.withColumn("cluster", _ivf_assign_udf(C)(F.col("embedding")))
-        .repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(path)
-    )
-    with open(os.path.join(path, "_ivf_meta.json"), "w") as f:
-        json.dump({"n_clusters": n_clusters, "centroids": C.tolist()}, f)
-
-
-def append_ivf_layout(embeddings_new: DataFrame, path: str) -> None:
-    """Incremental IVF maintenance: new vectors are assigned with the
-    EXISTING codebook (read from the layout meta — no retrain, no full
-    corpus pass) and appended into their cluster partition directories;
-    existing files are untouched, so daily vector ingest costs O(new).
-    Codebook drift under distribution shift is handled by periodically
-    rebuilding a fresh generation with write_ivf_layout — the classic
-    IVF serve/retrain split."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_ivf_meta.json")) as f:
-        meta = json.load(f)
-    C = np.asarray(meta["centroids"], dtype=np.float64)
-    (
-        embeddings_new.withColumn("cluster", _ivf_assign_udf(C)(F.col("embedding")))
-        .repartition("cluster")
-        .write.mode("append")
-        .partitionBy("cluster")
-        .parquet(path)
-    )
-    with open(os.path.join(path, "_appends.jsonl"), "a") as f:
-        f.write(json.dumps({"rows": embeddings_new.count()}) + "\n")
-
-
-def compact_ivf_layout(spark, src: str, dst: str) -> None:
-    """Fold an append-accumulated IVF layout into a fresh GENERATION at
-    ``dst`` (one file set per cluster partition again, instead of one file
-    set per append batch): one read + one cluster-keyed shuffle + one
-    write, no driver-side per-partition work and NO retrain — the codebook
-    is carried over verbatim, so a probe over the new generation is
-    row-identical to a probe over the old one. Serving switches atomically
-    by path (the generational pattern object stores need, mirroring
-    ``compact_scene_layout``); the source generation's files are never
-    touched, only superseded. The source's append manifest is preserved at
-    the new generation as ``_appends_compacted.jsonl`` for audit."""
-    import json
-    import os
-    import shutil
-
-    with open(os.path.join(src, "_ivf_meta.json")) as f:
-        meta = json.load(f)
-    (
-        spark.read.parquet(src)
-        .repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(dst)
-    )
-    with open(os.path.join(dst, "_ivf_meta.json"), "w") as f:
-        json.dump(meta, f)
-    leftover = os.path.join(src, "_appends.jsonl")
-    if os.path.exists(leftover):
-        shutil.copy(leftover, os.path.join(dst, "_appends_compacted.jsonl"))
-
-
-def probe_ivf_layout(
-    spark, path: str, queries: DataFrame, k: int = 10, nprobe: int = IVF_NPROBE
-) -> DataFrame:
-    """ivf_topk served from the at-rest layout: each query's nprobe nearest
-    cells become STATIC cluster partition predicates (queries are tiny by
-    definition, so the probe list is driver-bounded), the scan reads only
-    those directories, and exact cosine ranks the pruned candidates.
-    Identical output to ``ivf_topk`` at the layout's codebook."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_ivf_meta.json")) as f:
-        meta = json.load(f)
-    C = np.asarray(meta["centroids"], dtype=np.float64)
-    qrows = queries.select(
-        "query_id", F.explode(_ivf_probe_udf(C, nprobe)(F.col("qvec"))).alias("cluster")
-    ).collect()
-    qid_type = dict(queries.dtypes)["query_id"]
-    qc_df = spark.createDataFrame(
-        [(r["cluster"], r["query_id"]) for r in qrows],
-        f"cluster int, query_id {qid_type}",
-    )
-    pred = F.col("cluster").isin(sorted({r["cluster"] for r in qrows}))
-    cand = (
-        spark.read.parquet(path)
-        .where(pred)
-        .join(F.broadcast(qc_df), "cluster")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "embedding")
-    )
-    scored = cand.join(F.broadcast(queries), "query_id").select(
         "query_id",
         "vec_id",
         F.round(cosine(F.col("embedding"), F.col("qvec")), 6).alias("cos_sim"),
@@ -541,726 +413,4 @@ def near_dup_pairs(
             ).alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
-    )
-
-
-def write_band_layout(
-    embeddings: DataFrame,
-    path: str,
-    bands: int = TOPK_BANDS,
-    bits: int = TOPK_BITS,
-    dim: int = EMB_DIM,
-) -> None:
-    """Materialize the AT-REST probe layout: the corpus denormalized to one
-    row per (vector, band), written partitioned by (band, key). A probe is
-    then a PARTITION-PRUNED SCAN — bands x n_queries directories out of
-    bands x 2^bits — carrying the embedding alongside, so serving a query
-    needs no shuffle and no join against the base table. This is the layout
-    the module docstring promises for 10^12-vector corpora (bucket occupancy
-    held constant by scaling ``bits`` with log2(n))."""
-    import json
-    import os
-
-    bk = hyperplane_bands(embeddings, "vec_id", "embedding", bands, bits, dim)
-    (
-        bk.join(embeddings.select("vec_id", "embedding"), "vec_id")
-        .repartition("band", "key")
-        .write.mode("overwrite")
-        .partitionBy("band", "key")
-        .parquet(path)
-    )
-    with open(os.path.join(path, "_lsh_meta.json"), "w") as f:
-        json.dump({"bands": bands, "bits": bits, "dim": dim}, f)
-
-
-def append_band_layout(embeddings_new: DataFrame, path: str) -> None:
-    """Incremental LSH-layout maintenance: band keys for the new vectors
-    come from the SAME deterministic hyperplane family (seeded by
-    (bands, bits, dim) in the layout meta), so appended rows land in
-    exactly the (band, key) directories a fresh full build would put them
-    in — existing files untouched, probes unchanged."""
-    import json
-    import os
-
-    meta = read_band_layout_meta(path)
-    bk = hyperplane_bands(
-        embeddings_new, "vec_id", "embedding",
-        meta["bands"], meta["bits"], meta["dim"],
-    )
-    (
-        bk.join(embeddings_new.select("vec_id", "embedding"), "vec_id")
-        .repartition("band", "key")
-        .write.mode("append")
-        .partitionBy("band", "key")
-        .parquet(path)
-    )
-    with open(os.path.join(path, "_appends.jsonl"), "a") as f:
-        f.write(json.dumps({"rows": embeddings_new.count()}) + "\n")
-
-
-def compact_band_layout(spark, src: str, dst: str) -> None:
-    """Fold an append-accumulated LSH band layout into a fresh generation
-    at ``dst``: one read + one (band, key)-keyed shuffle + one write. The
-    hyperplane family is deterministic in (bands, bits, dim), so the meta
-    carries over verbatim and probes over the new generation are
-    row-identical. Same atomic-by-path generational pattern as
-    ``compact_ivf_layout`` / ``compact_scene_layout``."""
-    import json
-    import os
-    import shutil
-
-    meta = read_band_layout_meta(src)
-    (
-        spark.read.parquet(src)
-        .repartition("band", "key")
-        .write.mode("overwrite")
-        .partitionBy("band", "key")
-        .parquet(dst)
-    )
-    with open(os.path.join(dst, "_lsh_meta.json"), "w") as f:
-        json.dump(meta, f)
-    leftover = os.path.join(src, "_appends.jsonl")
-    if os.path.exists(leftover):
-        shutil.copy(leftover, os.path.join(dst, "_appends_compacted.jsonl"))
-
-
-def read_band_layout_meta(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, "_lsh_meta.json")) as f:
-        return json.load(f)
-
-
-def probe_band_layout(
-    spark, path: str, queries: DataFrame, k: int = 10
-) -> DataFrame:
-    """lsh_topk served from the at-rest layout: the queries' band keys are
-    computed driver-side (the query set is tiny by definition — bands x
-    n_queries values), turned into STATIC (band, key) partition predicates,
-    and the probe plan reads only those directories (PartitionFilters in the
-    scan — asserted by test_ann_multimodal). Exact cosine then ranks the
-    pruned candidates. Result is identical to ``lsh_topk`` at the layout's
-    (bands, bits)."""
-    meta = read_band_layout_meta(path)
-    bands, bits, dim = meta["bands"], meta["bits"], meta["dim"]
-    qb = hyperplane_bands(queries, "query_id", "qvec", bands, bits, dim)
-    qkeys = qb.collect()  # bands x n_queries rows — driver-bounded
-    corpus = spark.read.parquet(path)
-    qid_type = queries.schema["query_id"].dataType.simpleString()
-    if not qkeys:
-        return spark.createDataFrame(
-            [], f"query_id {qid_type}, vec_id {qid_type}, cos_sim double, rank int"
-        )
-    # one isin over the PACKED (band << bits) | key value instead of an
-    # OR-chain of bands x n_queries (band==b AND key==k) terms: the plan
-    # stays O(1)-sized at any query count, and because both operands are
-    # partition columns the scan still statically partition-prunes
-    # (PartitionFilters carries the packed INSET — asserted by test)
-    packed = sorted({(r["band"] << bits) | r["key"] for r in qkeys})
-    pred = (F.shiftleft(F.col("band"), bits) + F.col("key")).isin(packed)
-    qk_df = spark.createDataFrame(
-        [(r["band"], r["key"], r["query_id"]) for r in qkeys],
-        f"band int, key int, query_id {qid_type}",
-    )
-    cand = (
-        corpus.where(pred)
-        .join(F.broadcast(qk_df), ["band", "key"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "embedding")
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    scored = cand.join(F.broadcast(queries), "query_id").select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("embedding"), F.col("qvec")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def knn_join_exact(embeddings: DataFrame, k: int = 5) -> DataFrame:
-    """Self kNN join (every vector's k nearest others) — exact, windowed.
-    The all-pairs stage is the documented O(n²) baseline; production uses
-    lsh_topk's bucket join instead."""
-    a = embeddings.alias("a")
-    b = embeddings.alias("b")
-    scored = (
-        a.join(b, F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_id"),
-            F.col("b.vec_id").alias("neighbor"),
-            F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-# ---------------------------------------------------------------------------
-# SQ8 scalar quantization — the memory/IO lever for 10^12-vector serving:
-# float64/float32 embeddings stored as int8 + one per-vector scale cut the
-# at-rest and shuffle bytes 4-8x, and cosine over SYMMETRICALLY quantized
-# vectors is scale-free (the per-vector scales cancel in the normalized dot
-# product), so ranking quality degrades only by the 1/127 rounding noise.
-# ---------------------------------------------------------------------------
-
-
-def sq8_quantize(
-    embeddings: DataFrame, vec_col: str = "embedding"
-) -> DataFrame:
-    """Symmetric per-vector int8 quantization: q_i = round(127 * v_i /
-    max|v|), stored as array<tinyint> + the float scale (max|v|/127) for
-    consumers that need magnitudes. Pure Column expressions — JVM-side,
-    codegen'd, no UDF."""
-    mx = F.aggregate(
-        F.transform(F.col(vec_col), lambda x: F.abs(x.cast("double"))),
-        F.lit(0.0),
-        lambda acc, v: F.greatest(acc, v),
-    )
-    safe = F.greatest(mx, F.lit(1e-30))
-    return embeddings.withColumn(
-        "qvec8",
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * 127.0 / safe).cast("tinyint"),
-        ),
-    ).withColumn("qscale", (safe / 127.0).cast("float"))
-
-
-def sq8_topk(
-    quantized: DataFrame, queries: DataFrame, k: int = 10
-) -> DataFrame:
-    """Exact-cosine top-k computed ENTIRELY on the int8 representation
-    (the query is quantized with the same rule): cosine of quantized
-    vectors — the per-vector scales cancel, so no dequantization and no
-    float payload is ever read. Same output shape/tie-breaks as
-    brute_force_topk; recall vs the float ranking is pinned by test."""
-    qq = sq8_quantize(queries, "qvec").select(
-        "query_id", F.col("qvec8").alias("q8")
-    )
-    joined = quantized.select("vec_id", "qvec8").crossJoin(
-        F.broadcast(qq)
-    ).where(F.col("vec_id") != F.col("query_id"))
-    scored = joined.select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("qvec8"), F.col("q8")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ): m-subspace codebooks, ADC scan, exact refine
-# ---------------------------------------------------------------------------
-
-PQ_M = 8  # subspaces (codes per vector: one byte each at ksub<=256)
-PQ_KSUB = 256  # centroids per subspace (8-bit codes — the standard PQ cell)
-
-
-def pq_train(
-    embeddings: DataFrame,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = IVF_ITERS,
-    round_digits: int = 6,
-    sample_size: int = IVF_TRAIN_SAMPLE,
-) -> np.ndarray:
-    """Product-quantization codebooks, shape ``(m, ksub, dim/m)`` — the
-    compression tier past SQ8: a dim-64 float32 vector becomes ``m``
-    single-byte codes (32x at-rest/shuffle cut at m=8) with distances
-    still computable from the codes alone (ADC).
-
-    Training mirrors :func:`ivf_train`'s determinism contract exactly —
-    ONE distributed TakeOrdered over md5(id) for the sample, then an
-    independent HALF_UP-rounded Lloyd per dimension-slice in NumPy. Cost
-    is one corpus pass regardless of corpus size."""
-    if EMB_DIM % m:
-        raise ValueError(f"m={m} must divide dim={EMB_DIM}")
-    n_take = max(int(sample_size), int(ksub))
-    rows = (
-        embeddings.select(vec_col, F.md5(F.col(id_col).cast("string")).alias("h"))
-        .orderBy("h")
-        .limit(n_take)
-        .collect()
-    )
-    V = np.asarray([[float(x) for x in r[0]] for r in rows])
-    # cosine retrieval: quantize the L2-NORMALIZED vectors — then squared
-    # L2 is 2 - 2*cos, so the ADC scan ranks exactly by cosine
-    V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-    return _pq_codebooks_from(V, m, ksub, iters, round_digits)
-
-
-def _pq_codebooks_from(
-    V: np.ndarray, m: int, ksub: int, iters: int, round_digits: int
-) -> np.ndarray:
-    """Per-subspace deterministic Lloyd over an in-memory sample (rows may
-    be raw normalized vectors — pq_train — or coarse-cell residuals —
-    ivfpq_build); shape ``(m, ksub, dim/m)``."""
-    dsub = V.shape[1] // m
-    return np.stack([
-        _lloyd_numpy(
-            np.ascontiguousarray(V[:, j * dsub : (j + 1) * dsub]),
-            ksub, iters, round_digits,
-        )
-        for j in range(m)
-    ])
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    codebooks: np.ndarray,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Append ``pq_code`` (array<tinyint>, one code per subspace): per
-    subspace, L2-argmin against its codebook with first-min tie-break —
-    an Arrow-batched pandas UDF (the argmin over ksub centroids is a
-    small dense matmul per batch; the broadcast codebook is
-    m*ksub*dsub floats, kilobytes)."""
-    C = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, ksub, dsub = C.shape
-
-    @F.pandas_udf("array<tinyint>")
-    def encode(vecs: pd.Series) -> pd.Series:
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-        out = np.empty((len(V), m), dtype=np.int16)
-        for j in range(m):
-            sub = V[:, j * dsub : (j + 1) * dsub]
-            # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2; argmin drops ||x||^2
-            d = -2.0 * sub @ C[j].T + (C[j] ** 2).sum(axis=1)
-            out[:, j] = d.argmin(axis=1)
-        # tinyint is signed; store code-128 (zero-point offset) so ksub=256
-        # still fits one byte — ADC adds the 128 back
-        return pd.Series(list((out - 128).astype(np.int8)))
-
-    return embeddings.withColumn("pq_code", encode(F.col(vec_col)))
-
-
-def pq_topk(
-    encoded: DataFrame,
-    queries: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 10,
-    refine: int = 8,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ADC top-k with exact refine — the standard PQ serving shape:
-
-    1. ADC scan: per query, a lookup table of squared-L2 distances from
-       each query subvector to every centroid (m*ksub floats, built once
-       per query per batch); each corpus vector's approximate distance is
-       m table lookups summed — the scan touches ONLY the byte codes,
-       which is the point: at rest/in shuffle the corpus is 32x smaller.
-    2. Refine: the top ``k*refine`` ADC candidates are re-ranked with the
-       EXACT cosine on the original vectors (production fetches only
-       those originals). Recall@10 >= 0.9 at m=8/ksub=256 is pinned by
-       test; refine=1 degrades gracefully to pure ADC ranking.
-
-    Output schema/tie-breaks match brute_force_topk."""
-    C = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, ksub, dsub = C.shape
-    qrows = queries.select("query_id", "qvec").collect()
-
-    def _lut(qvec):
-        v = np.asarray(qvec, dtype=np.float64)
-        v = v / max(float(np.linalg.norm(v)), 1e-30)
-        return np.stack([
-            -2.0 * v[j * dsub : (j + 1) * dsub] @ C[j].T
-            + (C[j] ** 2).sum(axis=1)
-            for j in range(m)
-        ])
-
-    # driver-bounded: n_queries * m * ksub floats
-    qlut = {r["query_id"]: _lut(r["qvec"]) for r in qrows}
-
-    luts_b = qlut
-
-    @F.pandas_udf("double")
-    def adc(qids: pd.Series, codes: pd.Series) -> pd.Series:
-        out = np.empty(len(codes))
-        for i, (qid, code) in enumerate(zip(qids, codes)):
-            lut = luts_b[qid]
-            idx = np.asarray(code, dtype=np.int64) + 128  # undo zero-point offset
-            out[i] = lut[np.arange(m), idx].sum()
-        return pd.Series(out)
-
-    qdf = queries.select("query_id", "qvec")
-    # ADC scan carries ONLY (vec_id, code) through the ranking shuffle —
-    # the float vectors are joined back for the k*refine survivors alone
-    cand = (
-        encoded.select("vec_id", "pq_code")
-        .crossJoin(F.broadcast(qdf.select("query_id")))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adc_dist", adc(F.col("query_id"), F.col("pq_code")))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    short = cand.withColumn("arank", F.row_number().over(w_adc)).where(
-        F.col("arank") <= k * refine
-    )
-    scored = (
-        short.select("query_id", "vec_id")
-        .join(encoded.select("vec_id", vec_col), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-# ---------------------------------------------------------------------------
-# IVFADC (IVF + residual PQ): the standard production ANN serving shape
-# ---------------------------------------------------------------------------
-
-
-def ivfpq_build(
-    embeddings: DataFrame,
-    n_clusters: int = IVF_K,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = IVF_ITERS,
-    round_digits: int = 6,
-    sample_size: int = IVF_TRAIN_SAMPLE,
-) -> tuple[np.ndarray, np.ndarray, DataFrame]:
-    """Train and encode the IVFADC index: coarse k-means cells over the
-    L2-NORMALIZED corpus plus a shared residual-PQ codebook, returning
-    ``(coarse_centroids (n_clusters, dim), pq_codebooks (m, ksub, dim/m),
-    encoded_df (id, vec, cluster, pq_code))``.
-
-    Composition beats either tier alone at scale: the coarse cells cut the
-    scanned fraction to nprobe/n_clusters (and are the at-rest partition
-    key, same story as write_ivf_layout), while residuals — what's LEFT
-    after subtracting the cell centroid — are far more quantizable than raw
-    vectors, so the same byte budget loses less recall than flat PQ.
-
-    Determinism contract matches ivf_train/pq_train: ONE md5-ordered
-    TakeOrdered sample trains BOTH tiers (coarse Lloyd, then per-subspace
-    Lloyd over the sample's residuals), then ONE distributed encode pass
-    over the corpus. Both codebooks are driver/executor-broadcast
-    kilobytes."""
-    if EMB_DIM % m:
-        raise ValueError(f"m={m} must divide dim={EMB_DIM}")
-    n_take = max(int(sample_size), int(ksub), int(n_clusters))
-    rows = (
-        embeddings.select(vec_col, F.md5(F.col(id_col).cast("string")).alias("h"))
-        .orderBy("h")
-        .limit(n_take)
-        .collect()
-    )
-    V = np.asarray([[float(x) for x in r[0]] for r in rows])
-    V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-    coarse = _lloyd_numpy(V, n_clusters, iters, round_digits)
-    resid = V - coarse[_assign_l2(V, coarse)]
-    books = _pq_codebooks_from(resid, m, ksub, iters, round_digits)
-    return coarse, books, _ivfpq_encode(embeddings, coarse, books, id_col, vec_col)
-
-
-def _ivfpq_encode(
-    embeddings: DataFrame,
-    coarse: np.ndarray,
-    books: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The distributed IVFADC encode pass: (id, cluster, pq_code) via one
-    Arrow-batched UDF — shared by ivfpq_build (fresh codebooks) and
-    append_ivfpq_layout (codebooks loaded from the layout meta)."""
-    Cc = np.ascontiguousarray(coarse, dtype=np.float64)
-    Cb = np.ascontiguousarray(books, dtype=np.float64)
-    m = Cb.shape[0]
-    dsub = Cc.shape[1] // m
-
-    @F.pandas_udf("struct<cluster:int, pq_code:array<tinyint>>")
-    def encode(vecs: pd.Series) -> pd.DataFrame:
-        if len(vecs) == 0:
-            return pd.DataFrame({"cluster": pd.Series([], dtype="int32"),
-                                 "pq_code": pd.Series([], dtype=object)})
-        Vb = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        Vb = Vb / np.maximum(np.linalg.norm(Vb, axis=1, keepdims=True), 1e-30)
-        a = _assign_l2(Vb, Cc)
-        R = Vb - Cc[a]
-        out = np.empty((len(Vb), m), dtype=np.int16)
-        for j in range(m):
-            sub = R[:, j * dsub : (j + 1) * dsub]
-            d = -2.0 * sub @ Cb[j].T + (Cb[j] ** 2).sum(axis=1)
-            out[:, j] = d.argmin(axis=1)
-        return pd.DataFrame({
-            "cluster": a.astype(np.int32),
-            # zero-point offset: same one-byte contract as pq_encode
-            "pq_code": list((out - 128).astype(np.int8)),
-        })
-
-    return embeddings.select(
-        id_col, vec_col, encode(F.col(vec_col)).alias("_e")
-    ).select(id_col, vec_col, F.col("_e.cluster").alias("cluster"),
-             F.col("_e.pq_code").alias("pq_code"))
-
-
-def ivfpq_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_clusters: int = IVF_K,
-    nprobe: int = IVF_NPROBE,
-    refine: int = 8,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    vec_col: str = "embedding",
-    built: tuple[np.ndarray, np.ndarray, DataFrame] | None = None,
-) -> DataFrame:
-    """IVFADC top-k: probe each query's ``nprobe`` nearest coarse cells,
-    ADC-rank ONLY the byte codes in those cells against a per-(query, cell)
-    lookup table of ``||(q - c)_j - codeword||^2`` (summed over subspaces
-    this IS the squared L2 to the reconstructed vector, built once per
-    probed pair — driver payload n_queries * nprobe * m * ksub floats),
-    then re-rank the top ``k*refine`` survivors with the exact cosine on
-    the originals. Output schema/tie-breaks match brute_force_topk;
-    ``nprobe == n_clusters`` with a shortlist covering the corpus must
-    EQUAL brute force exactly (pinned by test — the refine step restores
-    exact ranking once coverage is total)."""
-    coarse, books, enc = built if built is not None else ivfpq_build(
-        embeddings, n_clusters=n_clusters, m=m, ksub=ksub, vec_col=vec_col
-    )
-    return _ivfpq_query(
-        enc.select("vec_id", "cluster", "pq_code"),
-        embeddings.select("vec_id", vec_col),
-        queries, coarse, books, k, nprobe, refine, m, vec_col,
-    )
-
-
-def _ivfpq_query(
-    enc: DataFrame,
-    originals: DataFrame,
-    queries: DataFrame,
-    coarse: np.ndarray,
-    books: np.ndarray,
-    k: int,
-    nprobe: int,
-    refine: int,
-    m: int,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The IVFADC probe/ADC/shortlist/refine machinery, shared by
-    ivfpq_topk (in-memory encode) and probe_ivfpq_layout (partition-pruned
-    at-rest scans). ``enc`` carries ONLY (vec_id, cluster, pq_code);
-    ``originals`` supplies the float vectors for the refine join alone."""
-    Cc = np.ascontiguousarray(coarse, dtype=np.float64)
-    Cb = np.ascontiguousarray(books, dtype=np.float64)
-    dsub = Cc.shape[1] // m
-
-    qrows = queries.select("query_id", "qvec").collect()
-    probe_rows, luts = [], {}
-    for r in qrows:
-        v = np.asarray(r["qvec"], dtype=np.float64)
-        v = v / max(float(np.linalg.norm(v)), 1e-30)
-        d = ((v[None, :] - Cc) ** 2).sum(axis=1)
-        for cell in np.argsort(d, kind="stable")[:nprobe]:
-            probe_rows.append((r["query_id"], int(cell)))
-            qc = v - Cc[cell]
-            luts[(r["query_id"], int(cell))] = np.stack([
-                ((qc[j * dsub : (j + 1) * dsub][None, :] - Cb[j]) ** 2).sum(axis=1)
-                for j in range(m)
-            ])
-
-    # the probed cells as STATIC predicates: on an at-rest layout these are
-    # partition filters (only nprobe/n_clusters of the files are read); on
-    # an in-memory encode they're a no-op-cheap filter
-    cells = sorted({c for _, c in probe_rows})
-    enc = enc.where(F.col("cluster").isin(cells))
-    if "cluster" in originals.columns:
-        originals = originals.where(F.col("cluster").isin(cells)).drop("cluster")
-
-    @F.pandas_udf("double")
-    def adc(qids: pd.Series, cells: pd.Series, codes: pd.Series) -> pd.Series:
-        # one vectorized gather per (query, cell) GROUP, not per row: all
-        # rows of a group share one LUT, so the batch groups collapse the
-        # Python iteration count from O(rows) to O(probed pairs). Per-row
-        # float summation order is unchanged (np.sum over the m-length
-        # rows of a (rows, m) gather is the same sequential reduction as
-        # the old per-row m-element sum), so scores are byte-identical.
-        out = np.empty(len(codes))
-        if not len(codes):
-            return pd.Series(out)
-        jj = np.arange(m)
-        groups = pd.DataFrame({"q": qids, "c": cells}).groupby(
-            ["q", "c"], sort=False
-        ).indices
-        for (qid, cell), idx in groups.items():
-            lut = luts[(qid, int(cell))]
-            mat = np.vstack(codes.iloc[idx].to_numpy()).astype(np.int64) + 128
-            out[idx] = lut[jj[None, :], mat].sum(axis=1)
-        return pd.Series(out)
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    spark = queries.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows,
-        StructType([
-            StructField("query_id", queries.schema["query_id"].dataType),
-            StructField("cluster", IntegerType()),
-        ]),
-    )
-    cand = (
-        enc.join(F.broadcast(probes), "cluster")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adc_dist", adc(F.col("query_id"), F.col("cluster"), F.col("pq_code")))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    short = cand.withColumn("arank", F.row_number().over(w_adc)).where(
-        F.col("arank") <= k * refine
-    )
-    qdf = queries.select("query_id", "qvec")
-    scored = (
-        short.select("query_id", "vec_id")
-        .join(originals, "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-# --- IVFADC at-rest layout: partition-pruned serving, incremental append,
-# --- generational compaction (mirrors write/append/compact_ivf_layout)
-
-IVFPQ_META = "_ivfpq_meta.json"
-
-
-def write_ivfpq_layout(
-    embeddings: DataFrame,
-    path: str,
-    n_clusters: int = IVF_K,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-) -> None:
-    """Materialize the IVFADC layout: corpus written partitioned by coarse
-    cluster with BOTH representations per row — the one-byte PQ codes the
-    ADC scan reads (column-pruned: that scan never touches the float
-    column) and the original vector the refine join reads back for the
-    k*refine shortlist only. Both codebooks persist beside the data, so
-    appends re-encode with them (no retrain) and a probe reads
-    nprobe/n_clusters of the files as a partition-pruned scan."""
-    import json
-    import os
-
-    coarse, books, enc = ivfpq_build(embeddings, n_clusters=n_clusters, m=m, ksub=ksub)
-    (
-        enc.repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(path)
-    )
-    with open(os.path.join(path, IVFPQ_META), "w") as f:
-        json.dump({
-            "n_clusters": n_clusters, "m": m, "ksub": ksub,
-            "coarse": coarse.tolist(), "books": books.tolist(),
-        }, f)
-
-
-def _load_ivfpq_meta(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, IVFPQ_META)) as f:
-        meta = json.load(f)
-    meta["coarse"] = np.asarray(meta["coarse"], dtype=np.float64)
-    meta["books"] = np.asarray(meta["books"], dtype=np.float64)
-    return meta
-
-
-def append_ivfpq_layout(embeddings_new: DataFrame, path: str) -> None:
-    """Incremental IVFADC maintenance: new vectors are encoded with the
-    layout's EXISTING codebooks (no retrain, no full-corpus pass) and
-    appended into their cluster partitions; drift is handled by a fresh
-    write_ivfpq_layout generation — the same serve/retrain split as
-    append_ivf_layout."""
-    import json
-    import os
-
-    meta = _load_ivfpq_meta(path)
-    (
-        _ivfpq_encode(embeddings_new, meta["coarse"], meta["books"])
-        .repartition("cluster")
-        .write.mode("append")
-        .partitionBy("cluster")
-        .parquet(path)
-    )
-    with open(os.path.join(path, "_appends.jsonl"), "a") as f:
-        f.write(json.dumps({"rows": embeddings_new.count()}) + "\n")
-
-
-def compact_ivfpq_layout(spark, src: str, dst: str) -> None:
-    """Fold an append-accumulated IVFADC layout into a fresh generation at
-    ``dst`` (one file set per cluster again): one read + one cluster-keyed
-    shuffle + one write, codebooks carried over verbatim so probes over the
-    new generation are row-identical; the source generation is never
-    touched, only superseded (same pattern as compact_ivf_layout)."""
-    import json
-    import os
-    import shutil
-
-    meta = _load_ivfpq_meta(src)
-    (
-        spark.read.parquet(src)
-        .repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(dst)
-    )
-    with open(os.path.join(dst, IVFPQ_META), "w") as f:
-        json.dump({
-            "n_clusters": meta["n_clusters"], "m": meta["m"], "ksub": meta["ksub"],
-            "coarse": meta["coarse"].tolist(), "books": meta["books"].tolist(),
-        }, f)
-    leftover = os.path.join(src, "_appends.jsonl")
-    if os.path.exists(leftover):
-        shutil.copy(leftover, os.path.join(dst, "_appends_compacted.jsonl"))
-
-
-def probe_ivfpq_layout(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = IVF_NPROBE,
-    refine: int = 8,
-) -> DataFrame:
-    """ivfpq_topk served from the at-rest layout: the probed cluster ids
-    become static partition predicates, the ADC scan reads ONLY
-    (vec_id, cluster, pq_code) from those directories (column pruning keeps
-    the float vectors unread — the 32x cut is what the scan actually
-    pays), and a second pruned scan supplies the originals for the
-    k*refine refine join alone."""
-    meta = _load_ivfpq_meta(path)
-    enc = spark.read.parquet(path).select("vec_id", "cluster", "pq_code")
-    originals = spark.read.parquet(path).select("vec_id", "embedding", "cluster")
-    return _ivfpq_query(
-        enc, originals, queries, meta["coarse"], meta["books"],
-        k, nprobe, refine, meta["m"],
     )

@@ -146,11 +146,10 @@ SCENE_LAYOUT_LEVEL = 6
 def write_scene_layout(
     scenes: DataFrame, path: str, level: int = SCENE_LAYOUT_LEVEL
 ) -> None:
-    """Materialize the at-rest SPATIAL layout of the scenes table — the
-    scene-catalog analogue of the ANN (band,key)/cluster layouts
-    (operators/ann.py): every scene row is written under EACH coarse
-    level-``level`` cell its bbox covers (bounded duplication: a scene
-    footprint spans O(1) cells at 2.8°), partitioned by that cell id.
+    """Materialize the at-rest SPATIAL layout of the scenes table: every
+    scene row is written under EACH coarse level-``level`` cell its bbox
+    covers (bounded duplication: a scene footprint spans O(1) cells at
+    2.8°), partitioned by that cell id.
 
     A bbox probe (probe_scene_layout) then reads ONLY the covering-cell
     directories — a statically partition-pruned scan with the fine search
@@ -160,17 +159,9 @@ def write_scene_layout(
     import json
     import os
 
-    covered = scenes.withColumn(
-        "pcell",
-        F.explode(
-            X.bbox_cells_expr(
-                F.col("bbox_xmin"), F.col("bbox_ymin"),
-                F.col("bbox_xmax"), F.col("bbox_ymax"), level,
-            )
-        ),
-    )
     (
-        covered.repartition("pcell")
+        cover_with_cells(scenes, level).withColumnRenamed("cell", "pcell")
+        .repartition("pcell")
         .write.mode("overwrite")
         .partitionBy("pcell")
         .parquet(path)
@@ -182,62 +173,23 @@ def write_scene_layout(
 def append_scene_layout(scenes_new: DataFrame, path: str) -> None:
     """INCREMENTAL maintenance of the at-rest spatial layout: new scene
     rows (e.g. a newly ingested day) are exploded to their covering cells
-    and APPENDED into the existing pcell partition directories — existing
-    files are never rewritten or touched, so at 100 TB a daily ingest costs
-    O(new scenes), not O(catalog). Each append records a line in the
-    layout's ``_appends.jsonl`` manifest (batch row count + cell count —
-    the commit-log idea from lineage.py applied to layouts). Probes are
-    unchanged: a partition dir simply accumulates one file set per batch
-    until ``compact_scene_layout`` folds a generation together."""
+    at the layout's level and APPENDED into the pcell partition directories
+    in one write — existing files are never rewritten or touched, so a
+    daily ingest costs O(new scenes), not O(catalog). Probes are
+    unchanged: a partition dir simply accumulates one file set per
+    append."""
     import json
     import os
 
     with open(os.path.join(path, "_layout_meta.json")) as f:
         level = json.load(f)["level"]
-    covered = scenes_new.withColumn(
-        "pcell",
-        F.explode(
-            X.bbox_cells_expr(
-                F.col("bbox_xmin"), F.col("bbox_ymin"),
-                F.col("bbox_xmax"), F.col("bbox_ymax"), level,
-            )
-        ),
-    )
-    covered = covered.repartition("pcell").persist()
-    try:
-        n_rows = covered.count()
-        n_cells = covered.select("pcell").distinct().count()
-        covered.write.mode("append").partitionBy("pcell").parquet(path)
-    finally:
-        covered.unpersist()
-    with open(os.path.join(path, "_appends.jsonl"), "a") as f:
-        f.write(json.dumps({"rows": int(n_rows), "cells": int(n_cells)}) + "\n")
-
-
-def compact_scene_layout(spark, src: str, dst: str) -> None:
-    """Fold an append-accumulated layout into a fresh GENERATION at ``dst``
-    (one file set per partition again): one read + one pcell-keyed shuffle
-    + one write, no driver-side per-partition work. Serving switches
-    atomically by path — the generational pattern object stores need,
-    since in-place per-directory rewrites are not atomic there."""
-    import json
-    import os
-    import shutil
-
-    with open(os.path.join(src, "_layout_meta.json")) as f:
-        meta = json.load(f)
     (
-        spark.read.parquet(src)
+        cover_with_cells(scenes_new, level).withColumnRenamed("cell", "pcell")
         .repartition("pcell")
-        .write.mode("overwrite")
+        .write.mode("append")
         .partitionBy("pcell")
-        .parquet(dst)
+        .parquet(path)
     )
-    with open(os.path.join(dst, "_layout_meta.json"), "w") as f:
-        json.dump(meta, f)
-    leftover = os.path.join(src, "_appends.jsonl")
-    if os.path.exists(leftover):
-        shutil.copy(leftover, os.path.join(dst, "_appends_compacted.jsonl"))
 
 
 def probe_scene_layout(
