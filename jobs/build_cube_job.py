@@ -35,8 +35,9 @@ def _run_per_day(spark, cat, grid, args, bbox, attrs) -> dict:
     the input per solar day makes each day an atomic checkpoint: a killed
     run's completed days are in the commit log and a --resume rerun SKIPS
     them before any plan is built (scan-level pruning, not post-hoc
-    filtering); the at-most-one partially-written day is recomputed and
-    overwritten idempotently (dynamic partition overwrite).
+    filtering); the at-most-one partially-written day is recomputed: dynamic
+    partition overwrite replaces its rewritten keys, and readers never see
+    its keys that no commit lists.
 
     Scene selection stays equivalent to the single-call build: each day's
     plan filters the SAME UTC time range down to solar_day == d, and the

@@ -1,7 +1,7 @@
-"""Spark-free check that operators/ann.py holds no code nothing runs: an
+"""Spark-free check that the operator modules hold no code nothing runs: an
 ``ast`` name closure from the entry module (``__spark_entry__.py``, whose
 ``queries()`` registers every query), the jobs and the benchmark must reach
-every top-level function of the module."""
+every top-level function of every module under ``xcube_stac_spark/operators``."""
 
 import ast
 import pathlib
@@ -18,7 +18,7 @@ def _names(node: ast.AST) -> set[str]:
     }
 
 
-def test_every_ann_function_is_reached():
+def test_every_operator_function_is_reached():
     defs: dict[str, list[ast.AST]] = {}
     for path in (ROOT / "xcube_stac_spark").rglob("*.py"):
         for node in ast.parse(path.read_text()).body:
@@ -36,6 +36,10 @@ def test_every_ann_function_is_reached():
         reached.add(name)
         for node in defs.get(name, ()):
             todo |= _names(node) - reached
-    ann = ast.parse((ROOT / "xcube_stac_spark/operators/ann.py").read_text())
-    funcs = [n.name for n in ann.body if isinstance(n, ast.FunctionDef)]
-    assert funcs and [f for f in funcs if f not in reached] == []
+    unreached = [
+        f"{path.name}:{n.name}"
+        for path in sorted((ROOT / "xcube_stac_spark/operators").glob("*.py"))
+        for n in ast.parse(path.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name not in reached
+    ]
+    assert unreached == []

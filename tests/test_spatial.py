@@ -89,18 +89,6 @@ def test_spatial_join_region_matches_bruteforce(cat, sf001_dir):
     assert exp == {i for i in got if not i.endswith("_XAM")}
 
 
-def test_points_in_scenes_pip(cat, spark):
-    pts = spark.createDataFrame(
-        [(12.0, 49.3, "in-core"), (0.0, 0.0, "far-away")],
-        "lon double, lat double, name string",
-    )
-    hits = spatial.points_in_scenes(cat.scenes(), pts)
-    got = hits.groupBy("name").count().collect()
-    counts = {r["name"]: r["count"] for r in got}
-    assert counts.get("in-core", 0) > 0
-    assert "far-away" not in counts
-
-
 def test_dedup_latest_version(cat):
     dd = spatial.dedup_latest_version(spatial.search_scenes(cat.scenes()))
     pairs = (

@@ -139,35 +139,6 @@ def test_mosaic_take_last_update_merge(spark, sf0001_dir):
     assert any(abs(a[k] - b[k]) > 1e-6 for k in a)  # overlaps resolved differently
 
 
-def test_bilinear_sample_properties(spark, sf0001_dir):
-    """Bilinear variant: exact at source-pixel centers, intermediate
-    between neighbors elsewhere, NaN near nodata corners."""
-    import numpy as np
-
-    from xcube_stac_spark.operators.tiles import (
-        _bilinear_sample, _tile_utm_coords,
-    )
-
-    img = (np.arange(100, dtype=np.uint16).reshape(10, 10) + 1) * 10
-    # fabricate a tiny "mesh" directly in scene meters: centers at
-    # x0 + (j+0.5)*res
-    res = 10.0
-    x0, y0 = 0.0, 100.0
-    e = np.array([[x0 + 2.5 * res, x0 + 3.0 * res]], dtype=np.float32)
-    n = np.array([[y0 - 4.5 * res, y0 - 4.5 * res]], dtype=np.float32)
-    vals, ok = _bilinear_sample(img, e, n, x0, y0, res, nodata=0.0)
-    assert ok.all()
-    # first point: exactly the center of pixel (row 4, col 2) → value 10*(4*10+2+1)
-    assert abs(vals[0, 0] - img[4, 2]) < 1e-3
-    # second point midway between cols 2 and 3 → mean of the neighbors
-    assert abs(vals[0, 1] - (img[4, 2] + img[4, 3]) / 2) < 1e-3
-    # nodata corner → invalid
-    img2 = img.copy()
-    img2[4, 3] = 0
-    v2, ok2 = _bilinear_sample(img2, e, n, x0, y0, res, nodata=0.0)
-    assert ok2[0, 0] and not ok2[0, 1]
-
-
 def test_pivot_bands(spark, sf0001_dir):
     cat = SceneCatalog(spark, sf0001_dir)
     wide = tiles_op.pivot_bands(cat.assets(), ["B02", "B03"], "fmt", ["item_id"]).collect()

@@ -7,7 +7,8 @@ so this module adds the Iceberg-commit-log idea over plain parquet, with ONE
 write path (``write_cube``):
 
 * the cube is written partitioned by ``(solar_day, tile_y, tile_x)``; every
-  data file carries a precomputed ``data_bytes`` column beside the planes;
+  row carries a precomputed ``data_bytes`` column beside the planes and the
+  ``run_id`` of the call that wrote it;
 * the caller passes the partition keys the call must cover, derived from
   metadata alone (``plans.cube.expected_partitions``); with ``resume=True``
   keys already in the commit log are anti-joined away, so a restarted job
@@ -16,8 +17,10 @@ write path (``write_cube``):
   ``_commitlog/`` holding a row per completed partition: key, row/byte
   counts, contributing item ids (lineage — the Spark analogue of the
   reference's ``stac_items`` attrs, utils.py:938-947). The table is written
-  distributed from a column-pruned read-back of the new files (staged, then
-  renamed into place), so no per-partition data ever crosses the driver;
+  distributed from a column-pruned read-back of this run's rows (staged,
+  then renamed into place), so no per-partition data ever crosses the driver;
+* readers see only committed keys: ``read_cube`` semi-joins the commit log,
+  so a crashed run's files are invisible without ever being deleted;
 * global attrs (query params, engine version — utils.py:907-952
   ``add_attrs``) land in ``_commitlog/_meta.json``; run totals in
   ``_commitlog/runs.jsonl`` (one line per call).
@@ -74,62 +77,25 @@ def _commit_tables(path: str) -> list[str]:
     ]
 
 
+def _commit_keys(spark: SparkSession, path: str) -> DataFrame:
+    """(solar_day, tile_y, tile_x) of every commit row, NOT deduplicated (a
+    key rewritten by a later call appears once per commit): the resume
+    anti-join and the read semi-join need no distinct, so no shuffle."""
+    commits = _commit_tables(path)
+    if not commits:
+        return spark.createDataFrame([], "solar_day date, tile_y int, tile_x int")
+    return spark.read.parquet(*commits).select(
+        F.to_date("solar_day").alias("solar_day"), "tile_y", "tile_x"
+    )
+
+
 def committed_partitions(spark: SparkSession, path: str) -> DataFrame:
     """DataFrame(solar_day, tile_y, tile_x) of completed partitions.
 
     Commits are parquet tables (one per successful write call), so this is a
     distributed scan — nothing partition-count-shaped ever crosses the
     driver."""
-    commits = _commit_tables(path)
-    if not commits:
-        return spark.createDataFrame(
-            [], "solar_day string, tile_y int, tile_x int"
-        ).withColumn("solar_day", F.to_date("solar_day"))
-    return (
-        spark.read.parquet(*commits)
-        .select("solar_day", "tile_y", "tile_x")
-        .withColumn("solar_day", F.to_date("solar_day"))
-        .distinct()
-    )
-
-
-def _preclean_distributed(keys: DataFrame, path: str) -> None:
-    """Delete partition directories for the given (solar_day, tile_y,
-    tile_x) keys as ONE distributed mapInPandas stage: each task rmtrees
-    its batch of keys against the shared store, so driver work is O(1) in
-    the key count. Leftover dirs exist only after a crash, so tasks mostly
-    do a single isdir miss.
-    On an object store the same stage issues batched DeleteObjects calls."""
-
-    def rm(batches):
-        import shutil
-
-        import pandas as pd
-
-        for pdf in batches:
-            n = 0
-            for r in pdf.itertuples(index=False):
-                d = os.path.join(
-                    path,
-                    f"solar_day={r.solar_day}",
-                    f"tile_y={int(r.tile_y)}",
-                    f"tile_x={int(r.tile_x)}",
-                )
-                if os.path.isdir(d):
-                    shutil.rmtree(d, ignore_errors=True)
-                    n += 1
-            yield pd.DataFrame({"n_removed": [n]})
-
-    (
-        keys.select(
-            F.col("solar_day").cast("string").alias("solar_day"),
-            "tile_y",
-            "tile_x",
-        )
-        .mapInPandas(rm, "n_removed int")
-        .agg(F.sum("n_removed"))
-        .first()
-    )
+    return _commit_keys(spark, path).distinct()
 
 
 def write_cube(
@@ -149,9 +115,9 @@ def write_cube(
     (plans.cube.expected_partitions: scene search x grid assignment, no
     pixel decode). The cube pipeline executes exactly once, straight into
     the parquet sink, and the commit metrics are aggregated from a
-    COLUMN-PRUNED read-back of the files just written: partition values plus
-    the small ``data_bytes`` column every file carries, so the plane payload
-    is never read twice.
+    COLUMN-PRUNED read-back of the rows this run wrote (``run_id`` filter):
+    partition values plus the small ``data_bytes`` column every row carries,
+    so the plane payload is never read twice.
 
     Resume contract: commit granularity is the WRITE CALL (all partitions of
     a successful call are committed atomically at its end); resume
@@ -161,14 +127,14 @@ def write_cube(
     input into several calls (one per solar day — the per-day job and the
     streaming path do exactly this).
 
-    Crash safety: a crash between data write and commit leaves only
-    uncommitted partition directories. A run that publishes no commit
-    removes its own ``_staging`` table; a killed process can still leave
-    one, which no reader looks at. Before writing, the directories of
-    expected-but-uncommitted keys are deleted (a distributed stage), so the read-back is exactly this run's
-    output: crash leftovers never leak into a commit, even for a key that
-    yields zero rows this run. Committed directories are never pre-cleaned;
-    dynamic partition overwrite replaces them only where new rows land.
+    Crash safety: nothing is deleted before writing. A crashed run's files
+    sit either in a key directory a later run rewrites, where dynamic
+    partition overwrite replaces them, or in a key no commit lists, which
+    ``read_cube`` hides; the read-back keeps only this run's ``run_id``, so
+    they never enter a commit, even for a key that yields zero rows. A
+    committed key whose rewrite yields zero rows keeps its directory. A run
+    that publishes no commit removes its own ``_staging`` table; a killed
+    process can still leave one, which no reader looks at.
 
     The per-partition rows never touch the driver: the aggregation is
     written (distributed) to the staging dir, and publishing a commit is a
@@ -183,55 +149,42 @@ def write_cube(
     run_id = uuid.uuid4().hex[:12]
     staging = os.path.join(_log_dir(path), "_staging", run_id)
     nothing = {"written_partitions": 0, "elapsed_sec": 0.0, "resumed": resume}
-    done = committed_partitions(spark, path)
-    have_commits = not done.isEmpty()
-    exp_all = expected_partitions.select(
+    keys = expected_partitions.select(
         F.to_date(F.col("solar_day").cast("string")).alias("solar_day"),
         F.col("tile_y").cast("int").alias("tile_y"),
         F.col("tile_x").cast("int").alias("tile_x"),
-    ).distinct()
-    # UNCOMMITTED expected keys: the only directories that may hold crash
-    # leftovers, and the only ones safe to delete in either resume mode
-    uncommitted = (
-        exp_all.join(F.broadcast(done), PART_COLS, "left_anti")
-        if have_commits
-        else exp_all
     )
-    # resume narrows the run to uncommitted keys; a full rewrite covers all
-    exp = uncommitted if (resume and have_commits) else exp_all
-    exp = exp.persist()  # one row per partition key — tiny at any cube size
+    if resume:  # cover only the keys no completed call has committed
+        keys = keys.join(F.broadcast(_commit_keys(spark, path)), PART_COLS, "left_anti")
+    keys = keys.persist()  # one row per partition key — tiny at any cube size
     try:
-        if exp.isEmpty():
+        # the run's solar days prune the read-back LISTING below: reading the
+        # store root would re-list and footer-read every partition ever
+        # written — O(total store) per call, O(N^2) over an N-day
+        # per-day/streaming loop
+        days = sorted(
+            str(r["solar_day"])
+            for r in keys.select("solar_day").distinct().collect()
+        )
+        if not days:
             return nothing
-        todo = cube
-        if resume and have_commits:
-            todo = todo.join(F.broadcast(done), PART_COLS, "left_anti")
-        # dynamic partition overwrite only replaces partitions that get
-        # rows, so a zero-row key would keep a crashed run's partial files
-        _preclean_distributed(uncommitted, path)
         # no repartition here: mosaic_take_first already hash-partitions its
-        # output on exactly this write key, so a shuffle of the full planes
-        # would be pure extra byte movement. The overwrite mode is set on
-        # this write only; the caller's session keeps its own.
+        # output on exactly this write key, and the broadcast semi-join keeps
+        # that partitioning. The overwrite mode is set on this write only;
+        # the caller's session keeps its own.
         (
-            todo.withColumn("solar_day", F.col("solar_day").cast("string"))
+            cube.join(F.broadcast(keys), PART_COLS, "left_semi")
+            .withColumn("solar_day", F.col("solar_day").cast("string"))
             .withColumn("data_bytes", F.octet_length("data"))
+            .withColumn("run_id", F.lit(run_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*PART_COLS)
             .parquet(path)
         )
-        # metrics/lineage from the just-written files, with the LISTING
-        # pruned to this run's solar days: reading the store root would
-        # re-list and footer-read every partition ever written — O(total
-        # store) per call, O(N^2) over an N-day per-day/streaming loop.
-        # A day directory is absent when every expected tile of that day
-        # produced zero rows (all-nodata scenes); the zero-days case returns
-        # before schema inference could fail on an empty store.
-        days = sorted(
-            str(r["solar_day"])
-            for r in exp.select("solar_day").distinct().collect()
-        )
+        # A day directory is absent when every tile of that day produced zero
+        # rows (all-nodata scenes); return before schema inference could fail
+        # on an empty store.
         day_paths = [
             p for p in (os.path.join(path, f"solar_day={d}") for d in days)
             if os.path.isdir(p)
@@ -243,13 +196,13 @@ def write_cube(
         (
             spark.read.option("basePath", path)
             .parquet(*day_paths)
+            .where(F.col("run_id") == run_id)
             .select(
                 F.to_date(F.col("solar_day").cast("string")).alias("solar_day"),
                 F.col("tile_y").cast("int").alias("tile_y"),
                 F.col("tile_x").cast("int").alias("tile_x"),
                 "n_scenes", "item_ids", "data_bytes",
             )
-            .join(F.broadcast(exp), PART_COLS, "left_semi")
             .groupBy(*PART_COLS)
             .agg(
                 F.count("*").alias("n_rows"),
@@ -266,7 +219,7 @@ def write_cube(
         )
         n_parts = spark.read.parquet(staging).count()
     finally:
-        exp.unpersist()
+        keys.unpersist()
     try:
         # publish: the staged metrics table BECOMES the commit record atomically
         if n_parts:
@@ -290,12 +243,17 @@ def write_cube(
 
 
 def read_cube(spark: SparkSession, path: str) -> DataFrame:
-    """Read a written cube back (partition columns restored to types)."""
+    """Read the committed keys of a written cube back (partition columns
+    restored to types, ``run_id`` dropped). Files of keys no commit lists —
+    a crashed run's leftovers — are invisible."""
+    df = spark.read.parquet(path)
+    cols = [c for c in df.columns if c != "run_id"]
     return (
-        spark.read.parquet(path)
-        .withColumn("solar_day", F.to_date("solar_day"))
+        df.withColumn("solar_day", F.to_date("solar_day"))
         .withColumn("tile_y", F.col("tile_y").cast("int"))
         .withColumn("tile_x", F.col("tile_x").cast("int"))
+        .join(F.broadcast(_commit_keys(spark, path)), PART_COLS, "left_semi")
+        .select(*cols)
     )
 
 

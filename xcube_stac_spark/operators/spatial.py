@@ -292,41 +292,6 @@ def footprint_intersects_bbox_udf(bbox: Sequence[float]):
     return pred
 
 
-def points_in_scenes(
-    scenes: DataFrame,
-    points: DataFrame,
-    level: int = cells_mod.DEFAULT_LEVEL,
-) -> DataFrame:
-    """General point-in-polygon join: points(lon, lat, ...) x scenes →
-    matched pairs. Coarse cell equi-join + exact ray-cast refine (J1).
-
-    The points side computes its cell with a pure Column expr; the refine
-    runs one vectorized ray cast per candidate pair inside an Arrow batch.
-    """
-    pts = points.withColumn("cell", X.cell_id_expr(F.col("lon"), F.col("lat"), level))
-    scn = cover_with_cells(scenes, level).select(
-        "cell", "item_id", "footprint"
-    )
-    cand = pts.join(scn, "cell").drop("cell")
-
-    @F.pandas_udf(T.BooleanType())
-    def pip(lon: pd.Series, lat: pd.Series, footprints: pd.Series) -> pd.Series:
-        out = np.empty(len(lon), dtype=bool)
-        lons = lon.to_numpy()
-        lats = lat.to_numpy()
-        for i, ring in enumerate(footprints):
-            rx = np.array([p["lon"] for p in ring])
-            ry = np.array([p["lat"] for p in ring])
-            out[i] = bool(
-                geom_mod.point_in_polygon(
-                    np.array([lons[i]]), np.array([lats[i]]), rx, ry
-                )[0]
-            )
-        return pd.Series(out)
-
-    return cand.where(pip(F.col("lon"), F.col("lat"), F.col("footprint"))).drop("footprint")
-
-
 def salted_cell_join(
     big: DataFrame,
     small: DataFrame,

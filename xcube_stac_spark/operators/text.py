@@ -42,20 +42,6 @@ def tokens_col(text: Column) -> Column:
     return F.split(F.lower(text), " ")
 
 
-def word_ngrams(text: Column, n: int = 3) -> Column:
-    """Word n-gram array via sequence+transform (no UDF). Short texts
-    (< n tokens) yield an empty array — guarded because Spark's sequence(1,0)
-    would count DOWN and element_at(0) throws under ANSI mode.
-
-    NOTE for hot paths: this embeds the tokenization INSIDE the transform
-    lambda, and Catalyst does not common-subexpression-eliminate a lambda's
-    captured expressions — the split re-runs per element per row, O(tokens²)
-    per document (profiled: ~7 s of a 345k-gram corpus's signature stage).
-    Pipelines should pre-project the token array once and use
-    ngrams_of_tokens (see _gram_rows)."""
-    return ngrams_of_tokens(tokens_col(text), n)
-
-
 def ngrams_of_tokens(toks: Column, n: int = 3) -> Column:
     """Word n-grams from an ALREADY-PROJECTED token-array column. When
     ``toks`` is a bound attribute the lambda reads the row value (O(tokens)
@@ -111,9 +97,9 @@ def _doc_gram_arrays(docs: DataFrame, ngram: int) -> DataFrame:
     """(doc_id, grams) with the DISTINCT gram ARRAY per doc — the narrow
     (zero-shuffle, zero-explode) form of the gram table. Tokens are
     projected in their own step so Catalyst does not inline the split into
-    the transform lambda (the O(tokens²) trap, see word_ngrams). NEVER put
-    a filter or explode directly on the ``grams`` attribute — see the
-    _gram_rows docstring for the filter-substitution trap; filter on
+    the transform lambda, where it would re-run per element (O(tokens²)).
+    NEVER put a filter or explode directly on the ``grams`` attribute — see
+    the _gram_rows docstring for the filter-substitution trap; filter on
     ``size(toks)`` upstream instead."""
     return docs.select("doc_id", tokens_col(F.col("text")).alias("toks")).select(
         "doc_id",

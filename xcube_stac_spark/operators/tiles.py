@@ -450,46 +450,6 @@ def pixel_residue_shift(origin: float, res: float) -> tuple[float, int]:
     return r, shift
 
 
-def _bilinear_sample(
-    img: np.ndarray, e: np.ndarray, n: np.ndarray,
-    scene_x0: float, scene_y0: float, res: float, nodata: float,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Bilinear resampling variant (the reference's resample_in_space
-    supports interpolation; NN remains the flagship default because the
-    take-first mosaic wants radiometrically untouched DNs). Returns
-    (float32 values, valid mask); any nodata corner invalidates a pixel."""
-    cf = (e - np.float32(scene_x0)) / np.float32(res) - np.float32(0.5)
-    rf = (np.float32(scene_y0) - n) / np.float32(res) - np.float32(0.5)
-    c0 = np.floor(cf).astype(np.int32)
-    r0 = np.floor(rf).astype(np.int32)
-    h, w = img.shape
-    inside = (c0 >= 0) & (c0 + 1 < w) & (r0 >= 0) & (r0 + 1 < h)
-    out = np.full(e.shape, np.nan, np.float32)
-    if inside.any():
-        c0i, r0i = c0[inside], r0[inside]
-        fx = (cf[inside] - c0i).astype(np.float32)
-        fy = (rf[inside] - r0i).astype(np.float32)
-        q00 = img[r0i, c0i].astype(np.float32)
-        q01 = img[r0i, c0i + 1].astype(np.float32)
-        q10 = img[r0i + 1, c0i].astype(np.float32)
-        q11 = img[r0i + 1, c0i + 1].astype(np.float32)
-        w00 = (1 - fx) * (1 - fy)
-        w01 = fx * (1 - fy)
-        w10 = (1 - fx) * fy
-        w11 = fx * fy
-        val = q00 * w00 + q01 * w01 + q10 * w10 + q11 * w11
-        # a nodata corner only invalidates where it actually contributes
-        bad = (
-            ((q00 == nodata) & (w00 > 0))
-            | ((q01 == nodata) & (w01 > 0))
-            | ((q10 == nodata) & (w10 > 0))
-            | ((q11 == nodata) & (w11 > 0))
-        )
-        val[bad] = np.nan
-        out[inside] = val
-    return out, np.isfinite(out)
-
-
 def _regrid_one(
     img: np.ndarray,
     grid: GridSpec,
@@ -651,37 +611,27 @@ def warm_plane_cache(scene_images: DataFrame, grid: GridSpec) -> int:
 
 
 def decode_regrid(
-    scene_images: DataFrame, grid: GridSpec, parallelism: int | None = None,
-    repartition: bool | None = None,
+    scene_images: DataFrame, grid: GridSpec, repartition: bool = True,
 ) -> DataFrame:
     """mapInPandas: (scene,band) image rows with target-tile arrays →
     long-form regridded tile rows. Decode runs once per input row; each
     emitted tile reuses the decoded array.
 
-    The input is explicitly round-robin repartitioned to ~3x core count
-    first: the decode+regrid stage is the compute-heavy one and its
-    parallelism must come from the ENGINE, not from however many row groups
-    the upstream parquet had (one fat input split serialized the whole
-    stage: 0.28 measured scaling efficiency). Round-robin beats spatial
-    keying here — per-tile projection is cached per worker and measured
-    cheap (~2 ms/tile, ~1% of stage time), so load balance matters more
-    than projection-cache locality. (On a real cluster the scenes table is
+    The input is round-robin repartitioned to 3x ``defaultParallelism``
+    first (``repartition=False`` keeps its partitioning): the decode+regrid
+    stage is the compute-heavy one and its parallelism must come from the
+    ENGINE, not from however many row groups the upstream parquet had (one
+    fat input split serialized the whole stage: 0.28 measured scaling
+    efficiency). Round-robin beats spatial keying here — per-tile
+    projection is cached per worker and measured cheap (~2 ms/tile, ~1% of
+    stage time), so load balance matters more than projection-cache
+    locality. (On a real cluster the scenes table is
     additionally partitioned by cell key so the METADATA joins prune; that
     is orthogonal to this decode-stage balance.)"""
     gd = grid.to_dict()
-
-    if parallelism is None:
-        parallelism = scene_images.sparkSession.sparkContext.defaultParallelism * 3
-    # skip the (bytes-heavy) exchange when the upstream scan already yields
-    # enough splits — repartition exists to FIX under-parallel inputs, not to
-    # tax well-partitioned ones with an extra full shuffle of the payload.
-    # ``repartition``: True forces the exchange, False skips it (callers that
-    # KNOW their input's split count avoid the getNumPartitions probe below,
-    # which costs an extra physical planning of the upstream subtree)
-    if repartition is None:
-        repartition = scene_images.rdd.getNumPartitions() < max(2, parallelism // 2)
     if repartition:
-        scene_images = scene_images.repartition(parallelism)
+        sc = scene_images.sparkSession.sparkContext
+        scene_images = scene_images.repartition(3 * sc.defaultParallelism)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         g = GridSpec.from_dict(gd)

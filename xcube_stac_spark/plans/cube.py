@@ -186,11 +186,7 @@ def build_cube(
     # build them inline duplicates the work across Python workers)
     if grid.tile_w * grid.tile_h >= 1 << 20:
         tiles.warm_plane_cache(assigned, grid)
-    # repartition=True explicitly: ``assigned`` always arrives from the
-    # AQE-coalesced metadata joins with fewer splits than the decode stage
-    # wants, so the probe inside decode_regrid would resolve True anyway —
-    # passing it skips an extra physical planning of the whole subtree.
-    regridded = tiles.decode_regrid(assigned, grid, repartition=True)
+    regridded = tiles.decode_regrid(assigned, grid)
     cube = tiles.mosaic_take_first(regridded)
     if with_spine:
         cube = tiles.time_spine(cube, time_range[0], time_range[1])

@@ -154,9 +154,5 @@ def angles_cube_from_xml(cat, grid, time_range=None, bands=None) -> DataFrame:
         "bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax",
     )
     assigned = tiles.assign_grid_tiles(imgs, grid)
-    # repartition=True explicitly: the angle-plane input comes from a
-    # grouped XML parse (few fat partitions), exactly the under-parallel
-    # shape the exchange exists to fix — and passing it skips decode_regrid's
-    # getNumPartitions probe (an extra physical planning of this subtree)
-    regridded = tiles.decode_regrid(assigned, grid, repartition=True)
+    regridded = tiles.decode_regrid(assigned, grid)
     return tiles.mosaic_take_first(regridded)

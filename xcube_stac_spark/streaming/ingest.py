@@ -253,8 +253,9 @@ def run_incremental_cube(
 
     Each micro-batch: the new scenes' solar days + grid tiles define the
     DIRTY partition set; the batch pipeline recomputes exactly those
-    partitions from the full catalog and overwrites them (idempotent —
-    dynamic partition overwrite + commit log)."""
+    partitions from the full catalog and overwrites them (dynamic partition
+    overwrite); a batch counts once its commit lands, and readers see only
+    committed keys."""
     stream = stream_scenes(spark, watch_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
